@@ -1,29 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-adaptive reduce sizing (r16, guide §2.2): coalesce shuffle
-      // partitions by SIZE, not to the core count — sub-second stages
-      // collapse to one task (the ~200-query floor class: probe set
-      // measured −18% at 32 cores, −4% at 8, no paired regression),
-      // while the advisory stays a conf: 8 MB locally so sf0.1 stages
-      // coalesce the way 100 TB stages would at the guide's 64–256 MB
-      // (SPARK_GRAFT_AQE_ADVISORY in production). parallelismFirst=false
-      // is the Spark-documented posture for exactly this ("respect the
-      // advisory size in a busy cluster").
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => args.contains(k) }
@@ -41,11 +21,11 @@ object Bench {
       sib.filter(p => java.nio.file.Files.isDirectory(p)).map(_.toString).getOrElse(sfDir)
     }
     try SparkEntry.entry(spark).count() catch {
-      case e: Throwable => System.err.println(s"[bench] entry warmup failed: $e")
+      case NonFatal(e) => System.err.println(s"[bench] entry warmup failed: $e")
     }
     selected.foreach { case (name, fn) =>
       try { fn(spark, warmDir).count(); () }
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: $e") }
+      catch { case NonFatal(e) => System.err.println(s"[bench] warmup $name failed: $e") }
       finally CacheRegistry.releaseAll()
     }
     // Two temporally-separated timing passes, per-query minimum: the box
@@ -53,14 +33,17 @@ object Bench {
     // the min of two spaced samples is a far better estimate of the true
     // plan cost than any single sample (a burst rarely covers the same
     // query in both passes).
-    def timeAll(): Seq[(String, Double)] =
+    def timeAll(): Seq[(String, Option[Double])] =
       selected.toSeq.sortBy(_._1).map { case (name, fn) =>
         // guide §1.5: label the jobs so a UI/event-log reader can
         // attribute every stage to its query
         spark.sparkContext.setJobDescription(s"bench:$name")
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt =
+          try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+          catch { case NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: $e"); None
+          }
         // release intra-query caches OUTSIDE the timed region — otherwise
         // pass 2 of a persisting query re-reads pass 1's cache and reports
         // a number no first-run pipeline would ever see
@@ -73,8 +56,12 @@ object Bench {
     // min-of-N steady-state samples, not single cold shots.
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
     val passes = Seq.fill(runs)(timeAll())
-    val results = passes.transpose.map(samples =>
-      samples.head._1 -> samples.map(_._2).min)
+    // a query that throws has no sample, never its time-to-failure; one
+    // that failed in any pass is listed under "failed" and left out of
+    // "queries", the total and the pass totals
+    val failed = passes.flatten.collect { case (k, None) => k }.toSet
+    val timed = passes.map(_.collect { case (k, Some(t)) if !failed(k) => k -> t })
+    val results = timed.transpose.map(samples => samples.head._1 -> samples.map(_._2).min)
     // Per-query seconds at millisecond precision (r16, the r15 verdict's
     // measurement-contract fix): the driver keeps only a bounded TAIL of
     // stdout, and sub-ms digits are pure noise at this methodology —
@@ -82,16 +69,17 @@ object Bench {
     // min-of-N) is UNCHANGED; see OPTIMIZATION_r16.md.
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = results.map(_._2).sum
     // Machine-readable burst context: the RAW total of each timing pass.
     // The headline `value` is the per-query min across passes; when the
     // box is under a co-tenant burst the pass totals diverge (±30%
     // documented), and round-over-round comparison needs that context in
     // the record itself, not in §8 prose. A reader computes
     // max(run_totals)/min(run_totals) as the burst indicator.
-    val runTotals = passes.map(p => p.map(_._2).sum)
-      .map(t => f"$t%.3f").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","runs":$runs,"run_totals":$runTotals,"queries":$qs,"sf":"$sfDir"}"""
+    val runTotals = timed.map(p => f"${p.map(_._2).sum}%.3f").mkString("[", ",", "]")
+    val failedJson = failed.toSeq.sorted.map(k => "\"" + k + "\"").mkString("[", ",", "]")
+    val totals = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","runs":$runs,"run_totals":$runTotals"""
+    val line = s"""$totals,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     // Persist the complete per-query record: the driver's artifact keeps
     // only the tail of the stdout line, so without a file most of each
     // round's timings are lost to the project history. GOVERNANCE (the
@@ -112,7 +100,7 @@ object Bench {
     // the ~10 KB one-line record truncated mid-line and nothing parseable
     // in the capture (PERF per_query empty two rounds running).
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] persist failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] persist failed: $e") }
     System.err.println(s"[bench] record -> $outPath")
     System.err.flush()
     // The full declared contract line (ONE JSON line with every query)...
@@ -121,8 +109,9 @@ object Bench {
     // verdict's prescription): the full 249-query line exceeds any bounded
     // tail capture, so a tail parser gets at least the totals, the burst
     // context, and the path to the complete per-query record.
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","runs":$runs,"run_totals":$runTotals,"n_queries":${results.size},"record":"$outPath","sf":"$sfDir"}""")
+    println(s"""$totals,"n_queries":${results.size},"failed":$failedJson,"record":"$outPath","sf":"$sfDir"}""")
     System.out.flush()
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

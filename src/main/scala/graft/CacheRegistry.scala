@@ -9,7 +9,7 @@ import org.apache.spark.sql.Dataset
   * frames). The result DataFrame is lazy, so the operator cannot unpersist
   * after its terminal consumer — only the caller knows when the query is
   * done. This registry is that contract: operators `track` what they
-  * persist, and entry points (Verify, Bench, GenPlans, any pipeline runner)
+  * persist, and entry points (Verify, Bench, GenPlanFiles, any pipeline runner)
   * call `releaseAll()` once each query completes. Without it a long-lived
   * session accumulates dead cached tables that pin executor storage memory
   * until LRU eviction — exactly the leak a daily 100 TB pipeline session

@@ -1,35 +1,24 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps `.explain("formatted")` of named queries to
-  * `<outDir>/<name><suffix>.txt` — the optimization-round evidence files
-  * (`plans/r15/<query>_before.txt` / `_after.txt`).
+/** Dumps `.explain("formatted")` of named queries, or of every registered
+  * query when none is named, to `<outDir>/<name><suffix>.txt` — the
+  * optimization-round evidence files (`plans/r15/<query>_before.txt` /
+  * `_after.txt`).
   *
-  * Usage: sbt "runMain graft.GenPlanFiles <outDir> <suffix> <q1> [q2 ...]"
-  * Data dir from $SPARK_GRAFT_SF_DIR (default sf0.1), cores from
-  * $SPARK_GRAFT_CPUS — the bench's session shape, so dumped plans carry
-  * the same partitioning/AQE decisions the bench executes. */
+  * Usage: sbt "runMain graft.GenPlanFiles <outDir> <suffix> [q1 q2 ...]"
+  * Data dir from $SPARK_GRAFT_SF_DIR (default sf0.1); the session is
+  * [[GraftSession]]'s, so dumped plans carry the same partitioning/AQE
+  * decisions the bench executes. */
 object GenPlanFiles {
   def main(args: Array[String]): Unit = {
     val outDir = Paths.get(args(0))
     Files.createDirectories(outDir)
     val suffix = args(1)
-    val names = args.drop(2)
+    val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the bench session's AQE posture (r16, Bench.scala) — plan
-      // evidence dumps at the shape the bench runs
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     // NonFatal only + nonzero exit on any failure (r15 ADVICE): a
     // swallowed error with exit 0 silently produces missing/stale plan
     // evidence files

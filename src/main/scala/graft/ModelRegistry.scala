@@ -53,7 +53,7 @@ import org.apache.spark.sql.functions._
   * model-artifact collect precedent); rung row counts are distributed
   * counts of already-checkpointed frames. Nothing corpus-sized ever
   * reaches the driver. */
-object ModelRegistry {
+object ModelRegistry extends QueryModule {
 
   private def md5hex(x: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -28,6 +28,14 @@ object OracleContext {
 
   def get: Option[(SparkSession, String)] = ctx
 
+  /** Puts back a context read with `get` (None unsets it). */
+  def restore(c: Option[(SparkSession, String)]): Unit = ctx = c
+
+  /** `sql` rendered on the context's session and data dir, or the
+    * placeholder when no context is set. */
+  def rendered(sql: (SparkSession, String) => String): String =
+    get.fold(Placeholder) { case (s, dir) => sql(s, dir) }
+
   val Placeholder =
     "SELECT 'model-as-literal oracle requires OracleContext (set by graft.Verify)' AS err"
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Driver contract — see SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -10,74 +10,59 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     etl.CrashPipeline.enrichedCrashes(spark, "/root/testdata/sf0.001")
 
+  /** Every operator family, each listed once. */
+  val modules: Seq[QueryModule] = Seq(
+    relational.CoreQueries,
+    etl.EtlQueries, etl.NearestJoin, etl.FuzzyMatch, etl.Anonymize, etl.DqReport, etl.Survivorship,
+    etl.GeoCluster, etl.RecordLinkage, etl.CompactionPlan, etl.SchemaDrift, etl.JoinProfile,
+    etl.ProfileSuggest, etl.RunReport, etl.Freshness,
+    text.TextQueries, text.ImportanceResample, text.SampleSplit, text.PpsSample, text.HashEmbed,
+    text.PiiScrub, text.BpeTrain, text.Reservoir, text.KnCounts, text.KnScore, text.LmScore,
+    text.PerplexityBuckets, text.LmEval, text.MixEval, text.ZipfFit, text.QualityClassifier,
+    text.UnigramTrain, text.NgramNovelty, text.EpochAlloc, text.Curriculum, text.CorpusPipeline,
+    text.Collocations, text.Fertility,
+    dedup.DedupQueries, dedup.MinHashLsh, dedup.SimHash, dedup.DedupClusters,
+    dedup.IncrementalNearDup, dedup.KnnSemantic,
+    sim.SimQueries, sim.Mmr, sim.AnnLsh, sim.AnnIvf, sim.BitextMine, sim.AnnPq, sim.AnnIvfPq,
+    sim.AnnCellStats, sim.AnnKnnGraph, sim.AnnGraphSearch, sim.VectorOps, sim.Kmeans, sim.Pca,
+    sim.Whiten, sim.KCenter, sim.QuantizeInt8, sim.BinaryEmb, sim.RecallEval,
+    multimodal.MultimodalQueries, multimodal.PhashNearDup, multimodal.Keyframes,
+    multimodal.AlignScore, multimodal.RetrievalEval,
+    streaming.StreamQueries, streaming.StreamLateData, streaming.StreamDedup,
+    streaming.StreamNearDup, streaming.StreamAnomaly, streaming.StreamTopK,
+    streaming.StreamCdcApply, streaming.StreamCep, streaming.StreamDistinct,
+    streaming.StreamQualityScore, streaming.StreamLinreg,
+    timeseries.TsQueries, timeseries.CrossCorr, timeseries.RollingQuantile, timeseries.Lttb,
+    timeseries.MannKendall, timeseries.TheilSen, timeseries.HoltWinters, timeseries.Periodogram,
+    timeseries.MatrixProfile,
+    stats.SketchQueries, stats.HeavyHitters, stats.KmvSketch, stats.Correlation, stats.CountMin,
+    stats.Concentration, stats.MannWhitney, stats.Hll, stats.Bootstrap, stats.Linreg, stats.Anova,
+    graph.PageRank, graph.Triangles, graph.Neighbors, graph.Bfs, graph.KCore, graph.Hits,
+    graph.LabelProp, graph.Louvain, graph.Components, graph.Modularity, graph.Assortativity,
+    graph.Scc, graph.Reciprocity, graph.Closeness, graph.Coreness, graph.Betweenness, graph.Anf,
+    analytics.FunnelQueries,
+    ModelRegistry)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    relational.CoreQueries.queries ++ etl.EtlQueries.queries ++ etl.NearestJoin.queries ++
-      etl.FuzzyMatch.queries ++ etl.Anonymize.queries ++ etl.DqReport.queries ++
-      etl.Survivorship.queries ++ etl.GeoCluster.queries ++ etl.RecordLinkage.queries ++
-      etl.CompactionPlan.queries ++ etl.SchemaDrift.queries ++ etl.JoinProfile.queries ++
-      etl.ProfileSuggest.queries ++ etl.RunReport.queries ++ etl.Freshness.queries ++
-      text.TextQueries.queries ++ text.ImportanceResample.queries ++ text.SampleSplit.queries ++ text.PpsSample.queries ++ text.HashEmbed.queries ++ text.PiiScrub.queries ++ text.BpeTrain.queries ++
-      text.Reservoir.queries ++ text.KnCounts.queries ++ text.KnScore.queries ++
-      text.LmScore.queries ++ text.PerplexityBuckets.queries ++ text.LmEval.queries ++ text.MixEval.queries ++ text.ZipfFit.queries ++ text.QualityClassifier.queries ++
-      text.UnigramTrain.queries ++ text.NgramNovelty.queries ++ text.EpochAlloc.queries ++ text.Curriculum.queries ++
-      text.CorpusPipeline.queries ++
-      dedup.DedupQueries.queries ++
-      dedup.MinHashLsh.queries ++ dedup.SimHash.queries ++
-      dedup.DedupClusters.queries ++ dedup.IncrementalNearDup.queries ++ dedup.KnnSemantic.queries ++
-      sim.SimQueries.queries ++ sim.Mmr.queries ++ sim.AnnLsh.queries ++ sim.AnnIvf.queries ++ sim.BitextMine.queries ++
-      sim.AnnPq.queries ++ sim.AnnIvfPq.queries ++ sim.AnnCellStats.queries ++ sim.AnnKnnGraph.queries ++ sim.AnnGraphSearch.queries ++
-      sim.VectorOps.queries ++ sim.Kmeans.queries ++ sim.Pca.queries ++ sim.Whiten.queries ++ sim.KCenter.queries ++
-      sim.QuantizeInt8.queries ++ sim.BinaryEmb.queries ++ sim.RecallEval.queries ++
-      multimodal.MultimodalQueries.queries ++ multimodal.PhashNearDup.queries ++ multimodal.Keyframes.queries ++ multimodal.AlignScore.queries ++ multimodal.RetrievalEval.queries ++
-      streaming.StreamQueries.queries ++ streaming.StreamLateData.queries ++
-      streaming.StreamDedup.queries ++ streaming.StreamNearDup.queries ++
-      streaming.StreamAnomaly.queries ++ streaming.StreamTopK.queries ++
-      streaming.StreamCdcApply.queries ++ streaming.StreamCep.queries ++
-      streaming.StreamDistinct.queries ++ streaming.StreamQualityScore.queries ++ streaming.StreamLinreg.queries ++
-      timeseries.TsQueries.queries ++ timeseries.CrossCorr.queries ++
-      timeseries.RollingQuantile.queries ++ timeseries.Lttb.queries ++ timeseries.MannKendall.queries ++ timeseries.TheilSen.queries ++ timeseries.HoltWinters.queries ++ timeseries.Periodogram.queries ++ timeseries.MatrixProfile.queries ++
-      stats.SketchQueries.queries ++ stats.HeavyHitters.queries ++ stats.KmvSketch.queries ++
-      stats.Correlation.queries ++ stats.CountMin.queries ++ stats.Concentration.queries ++ stats.MannWhitney.queries ++
-      stats.Hll.queries ++ stats.Bootstrap.queries ++ stats.Linreg.queries ++ stats.Anova.queries ++ text.Collocations.queries ++ text.Fertility.queries ++
-      graph.PageRank.queries ++ graph.Triangles.queries ++ graph.Neighbors.queries ++
-      graph.Bfs.queries ++ graph.KCore.queries ++ graph.Hits.queries ++
-      graph.LabelProp.queries ++ graph.Louvain.queries ++ graph.Components.queries ++ graph.Modularity.queries ++ graph.Assortativity.queries ++ graph.Scc.queries ++ graph.Reciprocity.queries ++ graph.Closeness.queries ++ graph.Coreness.queries ++ graph.Betweenness.queries ++ graph.Anf.queries ++
-      analytics.FunnelQueries.queries ++ ModelRegistry.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = union(modules)(_.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    relational.CoreQueries.oracles ++ etl.EtlQueries.oracles ++ etl.NearestJoin.oracles ++
-      etl.FuzzyMatch.oracles ++ etl.Anonymize.oracles ++ etl.DqReport.oracles ++
-      etl.Survivorship.oracles ++ etl.GeoCluster.oracles ++ etl.RecordLinkage.oracles ++
-      etl.CompactionPlan.oracles ++ etl.SchemaDrift.oracles ++ etl.JoinProfile.oracles ++
-      etl.ProfileSuggest.oracles ++ etl.RunReport.oracles ++ etl.Freshness.oracles ++
-      text.TextQueries.oracles ++ text.ImportanceResample.oracles ++ text.SampleSplit.oracles ++ text.PpsSample.oracles ++ text.HashEmbed.oracles ++
-      text.Reservoir.oracles ++ text.KnCounts.oracles ++ text.KnScore.oracles ++
-      text.PiiScrub.oracles ++ text.BpeTrain.oracles ++ text.UnigramTrain.oracles ++ text.NgramNovelty.oracles ++ text.EpochAlloc.oracles ++ text.Curriculum.oracles ++ sim.Pca.oracles ++ sim.Whiten.oracles ++ text.LmScore.oracles ++ text.PerplexityBuckets.oracles ++ text.LmEval.oracles ++ text.MixEval.oracles ++ text.ZipfFit.oracles ++
-      text.QualityClassifier.oracles ++ text.Fertility.oracles ++
-      text.CorpusPipeline.oracles ++ dedup.DedupQueries.oracles ++
-      dedup.DedupClusters.oracles ++ dedup.MinHashLsh.oracles ++
-      dedup.SimHash.oracles ++ dedup.IncrementalNearDup.oracles ++ dedup.KnnSemantic.oracles ++
-      sim.SimQueries.oracles ++ sim.Mmr.oracles ++ sim.AnnLsh.oracles ++ sim.BitextMine.oracles ++
-      sim.AnnIvf.oracles ++ sim.AnnPq.oracles ++
-      sim.AnnIvfPq.oracles ++ sim.AnnCellStats.oracles ++ sim.AnnKnnGraph.oracles ++ sim.AnnGraphSearch.oracles ++
-      sim.Kmeans.oracles ++ sim.KCenter.oracles ++ sim.QuantizeInt8.oracles ++
-      sim.BinaryEmb.oracles ++ sim.RecallEval.oracles ++
-      multimodal.MultimodalQueries.oracles ++ multimodal.Keyframes.oracles ++ multimodal.AlignScore.oracles ++ multimodal.RetrievalEval.oracles ++ multimodal.PhashNearDup.oracles ++
-      sim.VectorOps.oracles ++ streaming.StreamQueries.oracles ++ streaming.StreamLateData.oracles ++
-      streaming.StreamDedup.oracles ++ streaming.StreamAnomaly.oracles ++
-      streaming.StreamTopK.oracles ++ streaming.StreamCdcApply.oracles ++
-      streaming.StreamCep.oracles ++ streaming.StreamDistinct.oracles ++
-      streaming.StreamQualityScore.oracles ++ streaming.StreamLinreg.oracles ++
-      timeseries.TsQueries.oracles ++ timeseries.CrossCorr.oracles ++
-      timeseries.RollingQuantile.oracles ++ timeseries.Lttb.oracles ++ timeseries.MannKendall.oracles ++ timeseries.TheilSen.oracles ++ timeseries.HoltWinters.oracles ++ timeseries.Periodogram.oracles ++ timeseries.MatrixProfile.oracles ++
-      stats.SketchQueries.oracles ++ stats.HeavyHitters.oracles ++ stats.KmvSketch.oracles ++
-      stats.Correlation.oracles ++ stats.CountMin.oracles ++ stats.Concentration.oracles ++ stats.MannWhitney.oracles ++
-      stats.Hll.oracles ++ stats.Bootstrap.oracles ++ stats.Linreg.oracles ++ stats.Anova.oracles ++ text.Collocations.oracles ++
-      graph.PageRank.oracles ++ graph.Triangles.oracles ++ graph.Neighbors.oracles ++
-      graph.Bfs.oracles ++ graph.KCore.oracles ++ graph.Hits.oracles ++
-      graph.LabelProp.oracles ++ graph.Louvain.oracles ++ graph.Components.oracles ++ graph.Modularity.oracles ++ graph.Assortativity.oracles ++ graph.Scc.oracles ++ graph.Reciprocity.oracles ++ graph.Closeness.oracles ++ graph.Coreness.oracles ++ graph.Betweenness.oracles ++ graph.Anf.oracles ++
-      analytics.FunnelQueries.oracles ++ ModelRegistry.oracles
+    * the same parquet tables; rows-only keys have none. Rendered on every
+    * call, so model-as-literal oracles see the current [[OracleContext]]. */
+  def oracleSql: Map[String, String] = union(modules)(_.oracles)
+
+  /** The union of each module's `part`, failing with both module names
+    * when two modules (or one module listed twice) register one key. */
+  def union[V](modules: Seq[QueryModule])(part: QueryModule => Map[String, V]): Map[String, V] =
+    modules.foldLeft(Map.empty[String, (QueryModule, V)]) { (acc, m) =>
+      part(m).foldLeft(acc) { case (seen, (k, v)) =>
+        seen.get(k).foreach { case (first, _) =>
+          throw new IllegalStateException(
+            s"key '$k' is registered by both ${name(first)} and ${name(m)}")
+        }
+        seen.updated(k, (m, v))
+      }
+    }.map { case (k, (_, v)) => k -> v }
+
+  private def name(m: QueryModule): String = m.getClass.getName.stripSuffix("$")
 }

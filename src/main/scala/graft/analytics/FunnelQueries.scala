@@ -18,7 +18,7 @@ import graft.Tables
   * Retention derives the cohort with the same single-exchange window trick,
   * then one map-side-combinable groupBy.
   */
-object FunnelQueries {
+object FunnelQueries extends graft.QueryModule {
 
   /** signup → click → purchase with a 24 h conversion window per hop:
     * stage N counts only if it happens after stage N-1 and within the

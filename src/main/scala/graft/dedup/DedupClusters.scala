@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * the edge set, which LSH has already cut to ~O(dups). The oracle is a
   * recursive CTE computing the same transitive closure in DuckDB.
   */
-object DedupClusters {
+object DedupClusters extends graft.QueryModule {
 
   /** Connected components of an undirected edge list (u, v). The edge set
     * is materialized once up front (one checkpoint — its producer may be an

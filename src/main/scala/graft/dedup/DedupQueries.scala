@@ -13,7 +13,7 @@ import graft.Tables
   * MinHash/LSH bands in MinHashLsh.scala for the general case), which is the
   * standard sub-quadratic shape at 100 TB.
   */
-object DedupQueries {
+object DedupQueries extends graft.QueryModule {
 
   /** Distinct 3-word shingles of a document — compiled expression (see
     * HashExprs.Shingles for why the lambda version is O(words²)). Callers
@@ -781,10 +781,7 @@ object DedupQueries {
   }
 
   def oracles: Map[String, String] = staticOracles ++ Map(
-    "dedup_cdc_chunks" -> (graft.OracleContext.get match {
-      case None => graft.OracleContext.Placeholder
-      case Some((s, dir)) => cdcOracleSql(s, dir)
-    }))
+    "dedup_cdc_chunks" -> graft.OracleContext.rendered(cdcOracleSql))
 
   private val staticOracles: Map[String, String] = Map(
     "dedup_spans" ->

@@ -35,7 +35,7 @@ import graft.streaming.StreamNearDup
   * store is just another warehouse table; bucketing it by bkey
   * (operators/Bucketing) makes the daily join co-located.
   */
-object IncrementalNearDup {
+object IncrementalNearDup extends graft.QueryModule {
 
   /** Build/replace the signature store from a history corpus
     * (doc_id, text). One sketch pass, written banded. */

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * union-find under the 2²⁰-edge bound, distributed min-label +
   * pointer doubling above it). Oracle: the registered knn-graph chain as
   * one MATERIALIZED CTE + the house recursive transitive closure. */
-object KnnSemantic {
+object KnnSemantic extends graft.QueryModule {
 
   /** Shared with `dedup_semantic` ([[graft.sim.Kmeans.SemTau]]). */
   val Tau: Double = graft.sim.Kmeans.SemTau

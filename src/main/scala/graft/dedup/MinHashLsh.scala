@@ -17,7 +17,7 @@ import graft.Tables
   * shingle sets back by doc_id — at 100 TB that join is a shuffle of the
   * candidate subset only, which LSH has already cut to ~O(dups), not O(n²).
   */
-object MinHashLsh {
+object MinHashLsh extends graft.QueryModule {
 
   val K = 64          // signature length
   val Bands = 16      // 16 bands × r=4 rows; s-curve threshold ≈ (1/16)^(1/4) ≈ 0.5

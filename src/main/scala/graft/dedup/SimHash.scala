@@ -17,7 +17,7 @@ import graft.Tables
   * The bit arithmetic is expressed in Spark SQL (nested lambda aggregates)
   * so the whole computation stays inside whole-stage codegen.
   */
-object SimHash {
+object SimHash extends graft.QueryModule {
 
   /** Per-document simhash plus Hamming-≤3 near-dup pairs via 16-bit bands.
     * The hash is the compiled SimHash64 expression (see HashExprs); the

@@ -33,7 +33,7 @@ import graft.Tables
   * the group keys themselves, so co-partitioning is free). One fact
   * scan feeds the level-0 count and the tagging join via the tracked
   * cache; no windows over the full fact stream, no driver state. */
-object Anonymize {
+object Anonymize extends graft.QueryModule {
 
   val K = 5L
   /** Narrow enough that the test corpora (user_id range is small there)

@@ -30,7 +30,7 @@ import graft.Tables
   * (|days| rows at any corpus size — the 100 TB input would be the file
   * manifest, not the data); the cumulative window partitions by month, so
   * no global sort; everything downstream runs on |days| rows. */
-object CompactionPlan {
+object CompactionPlan extends graft.QueryModule {
 
   val TargetBytes = 131072L // 128 KiB per planned output file
   val SmallBytes = 16384L   // a source file below this is a "small file"

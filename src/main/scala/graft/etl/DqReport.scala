@@ -23,7 +23,7 @@ import graft.Tables
   * report is a union of per-check single rows — constant size however
   * large the inputs.
   */
-object DqReport {
+object DqReport extends graft.QueryModule {
 
   /** Validity ceiling for `value` (the sensor-range rule shared by the
     * report and the quarantine — one source of truth). */

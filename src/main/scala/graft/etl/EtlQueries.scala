@@ -13,7 +13,7 @@ import Synth._
   * re-expresses. The warehouse ("carto") and source ("soda") snapshots are
   * synthesized from `events` per Synth.
   */
-object EtlQueries {
+object EtlQueries extends graft.QueryModule {
 
   private val IngestCutoff = java.sql.Timestamp.valueOf("2024-01-25 00:00:00")
   private val MergeCutoff  = java.sql.Timestamp.valueOf("2024-01-20 00:00:00")

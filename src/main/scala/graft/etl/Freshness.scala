@@ -18,7 +18,7 @@ import graft.Tables
   * Scale: one map-side-combinable (count, max) aggregate per type off one
   * pruned scan; the corpus frontier is the same aggregate un-keyed — a
   * one-row broadcast; the readout is |types| rows of integer day math. */
-object Freshness {
+object Freshness extends graft.QueryModule {
 
   /** SLA: a feed more than this many days behind the frontier is stale. */
   val StaleDays = 7L

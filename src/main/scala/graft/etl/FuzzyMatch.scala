@@ -23,7 +23,7 @@ import graft.operators.FuzzyJoin
   * then the distinct-vocabulary-sized mapping broadcasts back onto the
   * fact stream — the fact table is scanned once and never shuffled.
   */
-object FuzzyMatch {
+object FuzzyMatch extends graft.QueryModule {
 
   val MaxDist = 2
 

@@ -36,7 +36,7 @@ import graft.Tables
   * edge list via [[graft.dedup.DedupClusters.connectedComponents]]
   * (min-label propagation + pointer doubling, localCheckpoint per round).
   * The oracle replays everything, components as a recursive CTE. */
-object GeoCluster {
+object GeoCluster extends graft.QueryModule {
 
   val Eps0 = 0.002 // calibrated at N0 = 10^4 points
   val MinPts = 4L

@@ -22,7 +22,7 @@ import graft.Tables
   * hash join against the customer keys (uniform key), one constant-size
   * aggregate — no fact-table fan-out anywhere (the profile is computed
   * FROM aggregates, which is the whole point of running it first). */
-object JoinProfile {
+object JoinProfile extends graft.QueryModule {
 
   def profile(s: SparkSession, dir: String): DataFrame = {
     val perCust = Tables.orders(s, dir)

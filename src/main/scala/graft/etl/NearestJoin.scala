@@ -29,7 +29,7 @@ import graft.operators.RangeJoin
   * BETWEEN near-equidistant sites agrees across engines and `d2` itself is
   * hash-comparable unrounded (trig metrics guarantee neither).
   */
-object NearestJoin {
+object NearestJoin extends graft.QueryModule {
 
   val LngScale = 0.75
   val R2 = 0.0001 // (0.01°)² in lat-degrees² — same literal in the oracle

@@ -24,7 +24,7 @@ import graft.Tables
   * be injective WITHIN an engine for counting, so cross-engine float
   * formatting differences cannot matter; no raw values are emitted.
   * `approx_count_distinct` is the documented 100 TB swap. */
-object ProfileSuggest {
+object ProfileSuggest extends graft.QueryModule {
 
   val EnumMaxValues = 20L
 

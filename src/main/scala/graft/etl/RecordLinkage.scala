@@ -33,7 +33,7 @@ import graft.Tables
   * `event_id` appears ONLY as the row identifier in the output — the
   * match decision never reads it, which is what lets the spec use it as
   * ground truth to measure precision/recall of the linkage. */
-object RecordLinkage {
+object RecordLinkage extends graft.QueryModule {
 
   val LinkCellDeg = 0.005
   val LngScale = 0.75

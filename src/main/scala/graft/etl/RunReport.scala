@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * map-side-combinable aggregates of those plans, and the report is a
   * union of |steps| single-row frames — constant output however large the
   * run. */
-object RunReport {
+object RunReport extends graft.QueryModule {
 
   /** The reference daily-run steps whose outputs the summary reports —
     * the FULL `main()` sequence (`main.py:1132+`): ingest, both CDC

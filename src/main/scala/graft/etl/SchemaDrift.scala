@@ -27,7 +27,7 @@ import graft.Tables
   * row multiplier (×|keys per payload|); the aggregate is |keys| × 2 rows;
   * the half totals are a one-row broadcast. The key-classify join runs on
   * the |keys|-row aggregate. */
-object SchemaDrift {
+object SchemaDrift extends graft.QueryModule {
 
   /** Presence-rate shift threshold as an exact fraction: 1/5 = 20 points. */
   val ShiftNum = 1L

@@ -29,7 +29,7 @@ import graft.Tables
   * windows, no joins, no second pass. The survivorship rule evaluates
   * per-row before the aggregate, so at 100 TB this is a plain partial
   * aggregate. */
-object Survivorship {
+object Survivorship extends graft.QueryModule {
 
   /** (micros since 2024-01-01) · 2^13 + event_id mod 2^13 — total order
     * for any corpus with < 8192 colliding-microsecond events per instant.

@@ -38,7 +38,7 @@ import graft.stats.Hll
   * nf / avg_ball / pct_final are each ONE fixed-form division of exact
   * integers. `covers90` marks h with N(h) ≥ 0.9·N(H) via exact integer
   * cross-multiply — the effective-diameter read-off. */
-object Anf {
+object Anf extends graft.QueryModule {
 
   val H = 6
 

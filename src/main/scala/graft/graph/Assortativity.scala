@@ -27,7 +27,7 @@ import graft.Tables
   * Scale: the shared simple-edge chain → one map-side degree count → two
   * uniform-key endpoint joins → ONE row of moments. Same cost envelope
   * as `graph_modularity`; the two share the cached edge list. */
-object Assortativity {
+object Assortativity extends graft.QueryModule {
 
   def assortativity(s: SparkSession, dir: String): DataFrame = {
     val docs = GraphArtifacts.stagedVertices(s, dir)

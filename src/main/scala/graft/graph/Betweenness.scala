@@ -51,7 +51,7 @@ import graft.Tables
   * equi-join of the settled BFS against itself through the edge list;
   * per backward round one equi-join + map-side sum on the depth-d slice.
   * localCheckpoint lineage cuts per round; interpreted-loop gated. */
-object Betweenness {
+object Betweenness extends graft.QueryModule {
 
   val K = 8
   val MaxHops = 6

@@ -27,7 +27,7 @@ import graft.Tables
   * lineage is cut per round with localCheckpoint (the `dedup_clusters`
   * loop pattern). A bounded-hop BFS is the production form — unbounded
   * BFS on a link graph is a crawl, not a query. */
-object Bfs {
+object Bfs extends graft.QueryModule {
 
   val MaxHops = 6
   val Source = 0L

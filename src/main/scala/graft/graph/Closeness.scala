@@ -37,7 +37,7 @@ import graft.Tables
   * multiplicative state (≤ K·|V| rows total), frontier-proportional
   * work, localCheckpoint lineage cuts (the `graph_bfs` loop contract);
   * the readout is one |V|-key map-side aggregate. */
-object Closeness {
+object Closeness extends graft.QueryModule {
 
   val K = 8
   val MaxHops = 6

@@ -29,7 +29,7 @@ import graft.Tables
   * contract (edge-linear shuffles, log-diameter rounds); the size readout
   * is one |V|-key aggregate joined back on the label — map-side
   * combinable, uniform keys. */
-object Components {
+object Components extends graft.QueryModule {
 
   /** Min-label + pointer-doubling rounds the oracle unrolls. */
   val OracleRounds = 6

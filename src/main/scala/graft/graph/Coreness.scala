@@ -42,7 +42,7 @@ import graft.Tables
   * + a per-node window over NEIGHBOR LISTS (bounded by degree — never a
   * global or corpus-wide sort) + a map-side max; `localCheckpoint` cuts
   * lineage per round (the `graph_kcore` loop contract). */
-object Coreness {
+object Coreness extends graft.QueryModule {
 
   val Rounds = 8
 

@@ -28,7 +28,7 @@ import graft.Tables
   * map-side-combinable aggregate + a one-row total broadcast;
   * `localCheckpoint` cuts lineage per round (the dedup_clusters loop
   * contract). No NLJ, no driver-side score state. */
-object Hits {
+object Hits extends graft.QueryModule {
 
   val Scale = 1000000000L // 10^9: score sums ≤ Scale ⇒ products ≤ 10^18 < 2^63
   val Iters = 5

@@ -33,7 +33,7 @@ import graft.Tables
   * monotonically); `localCheckpoint` cuts lineage so the loop cost stays
   * per-round flat. No NLJ, no driver-side graph state.
   */
-object KCore {
+object KCore extends graft.QueryModule {
 
   val CoreK = 3L
   val PeelRounds = 6

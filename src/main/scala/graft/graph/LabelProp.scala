@@ -36,7 +36,7 @@ import graft.Tables
   * bipartite structures (Raghavan §III's two-coloring flip), so a false
   * flag marks exactly the rows whose community is still moving when the
   * budget cuts off. */
-object LabelProp {
+object LabelProp extends graft.QueryModule {
 
   val Rounds = 4
 

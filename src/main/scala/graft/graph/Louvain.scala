@@ -53,7 +53,7 @@ import org.apache.spark.sql.functions._
   * aggregate + one row_number pick — the labelprop round shape plus one
   * broadcastable Σtot join; adjacency is the staged family rung
   * ([[GraphArtifacts]]), lineage cut per pass. */
-object Louvain {
+object Louvain extends graft.QueryModule {
 
   val Passes = 10
 

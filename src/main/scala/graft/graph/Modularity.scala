@@ -32,7 +32,7 @@ import graft.Tables
   * |nodes|-row community map (endpoint lookups), one map-side degree
   * count, all reductions to ≤|communities| rows then one row — the
   * audit costs one pass over the edges beyond labelprop itself. */
-object Modularity {
+object Modularity extends graft.QueryModule {
 
   def modularity(s: SparkSession, dir: String): DataFrame = {
     val docs = GraphArtifacts.stagedVertices(s, dir)

@@ -29,7 +29,7 @@ import graft.Tables
   * Plan: edges → degree aggregate → capped-apex wedge self-join (uniform
   * keys by construction) → pair count → join to capped-neighborhood
   * sizes. All joins hash, no NLJ, no driver state. */
-object Neighbors {
+object Neighbors extends graft.QueryModule {
 
   val ApexDfCap = 20L
   val MinCommon = 2L

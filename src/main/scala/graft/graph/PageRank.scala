@@ -35,7 +35,7 @@ import graft.Tables
   * is cut per round with a localCheckpoint, the `dedup_clusters` loop
   * pattern.
   */
-object PageRank {
+object PageRank extends graft.QueryModule {
 
   val Scale = 1000000000000L
   val Iters = 10

@@ -40,7 +40,7 @@ import graft.Tables
   * the mutual count, two one-row aggregates crossed into the readout (the
   * `graph_modularity` bounded one-row BNLJ class). No windows, nothing
   * quadratic, nothing driver-side but the bounded vertex count N. */
-object Reciprocity {
+object Reciprocity extends graft.QueryModule {
 
   def reciprocity(s: SparkSession, dir: String): DataFrame = {
     val docs = GraphArtifacts.stagedVertices(s, dir)

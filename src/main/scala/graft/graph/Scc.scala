@@ -56,7 +56,7 @@ import graft.Tables
   * lineage per round (the `graph_kcore` loop contract). Empty-active
   * rounds are skipped Spark-side (identical result: an empty round is a
   * no-op), so the common one-giant-SCC corpus pays for a single peel. */
-object Scc {
+object Scc extends graft.QueryModule {
 
   val OuterRounds = 4
   val FwdRounds = 12

@@ -36,7 +36,7 @@ import graft.Tables
   * is bit-identical under any partitioning and the oracle is a FULL
   * replay.
   */
-object Triangles {
+object Triangles extends graft.QueryModule {
 
   /** Packs (deg, id) lexicographic order into one BIGINT. Holds while
     * deg < 2^63 / KeyScale and id < KeyScale — comfortably true for any

@@ -41,7 +41,7 @@ import graft.Tables
   * aggregates, dot = one (doc_id, dim) equi-join + per-doc sum, readout
   * = three per-doc equi-joins on uniform keys; the audit rate is a
   * window over |source| partitions. No all-pairs, nothing driver-side. */
-object AlignScore {
+object AlignScore extends graft.QueryModule {
 
   val CaptionChars = 80
   val AlignTau = 0.35

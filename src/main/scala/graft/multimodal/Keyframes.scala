@@ -32,7 +32,7 @@ import graft.Tables
   * against the ≤K-row selected set, a map-side min, and a per-video
   * row_number on the bounded candidate frame — K−1 rounds of uniform-key
   * hash joins, nothing quadratic in videos, nothing driver-side. */
-object Keyframes {
+object Keyframes extends graft.QueryModule {
 
   val K = 3
 

@@ -14,7 +14,7 @@ import graft.Tables
   * Spark-side plumbing (binary column, byte length, digest, derived
   * dimensions, batched partition-wise processing in BinaryPipeline) is real.
   */
-object MultimodalQueries {
+object MultimodalQueries extends graft.QueryModule {
 
   /** #30 Binary metadata projection: encode→bytes→digest→stub-decoded dims. */
   def binaryMeta(s: SparkSession, dir: String): DataFrame = {

@@ -32,7 +32,7 @@ import graft.Tables
   * cross-engine. The fingerprint recurrence itself stays covered by
   * PhashNearDupSpec's replica + the frozen canary.
   */
-object PhashNearDup {
+object PhashNearDup extends graft.QueryModule {
 
   /** Pigeonhole-guaranteed detection bound: ≤3 bit flips cannot touch all
     * four 16-bit bands. */
@@ -102,8 +102,5 @@ object PhashNearDup {
   }
 
   def oracles: Map[String, String] = Map(
-    "mm_phash_neardup" -> (graft.OracleContext.get match {
-      case None => graft.OracleContext.Placeholder
-      case Some((s, dir)) => phashOracleSql(s, dir)
-    }))
+    "mm_phash_neardup" -> graft.OracleContext.rendered(phashOracleSql))
 }

@@ -38,7 +38,7 @@ import graft.Tables
   * sparse dot is one dim-keyed equi-join over pool rows only; the
   * corpus-wide work is the two map-side featVec aggregates, pruned to
   * the pool before anything pairs. */
-object RetrievalEval {
+object RetrievalEval extends graft.QueryModule {
 
   val PoolN = 100L
 

@@ -15,7 +15,7 @@ import graft.Tables
   * a deterministic orderBy and rounds floats so the DuckDB oracle compare is
   * stable.
   */
-object CoreQueries {
+object CoreQueries extends graft.QueryModule {
 
   /** TPC-H Q1-style pricing summary: single scan, map-side partial agg. */
   def q1PricingSummary(s: SparkSession, dir: String): DataFrame = {

@@ -33,7 +33,7 @@ import graft.dedup.DedupQueries.cosineSql
   * expression (zero shuffle); the audit adds ONE |cells|-key
   * map-side-combinable aggregate and a |cells|-row join against the
   * cell list. */
-object AnnCellStats {
+object AnnCellStats extends graft.QueryModule {
 
   def cellStats(s: SparkSession, dir: String): DataFrame = {
     graft.functions.HashExprs.register(s)

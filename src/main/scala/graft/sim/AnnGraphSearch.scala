@@ -47,7 +47,7 @@ import graft.dedup.DedupQueries.cosine
   * parameters, so the whole search is [[Hops]]+1 rung scans regardless of
   * corpus size — the property that makes graph-ANN the 100 TB serving
   * path. */
-object AnnGraphSearch {
+object AnnGraphSearch extends graft.QueryModule {
 
   val Ef = 16 // beam width (HNSW efSearch)
   val Hops = 3 // fixed hop budget

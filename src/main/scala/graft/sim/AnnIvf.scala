@@ -20,7 +20,7 @@ import graft.dedup.DedupQueries.{cosine, cosineSql}
   * probe join is an equi-join on cell id — per-query work drops from O(N)
   * to O(N·nprobe/cells), and cells shard naturally across executors.
   */
-object AnnIvf {
+object AnnIvf extends graft.QueryModule {
 
   /** Cell count scales with corpus size (IVF's standard √n sizing — with
     * cells ∝ √n, per-probe candidate volume n·nprobe/cells grows ~√n, not

@@ -42,7 +42,7 @@ import graft.dedup.DedupQueries.cosineSql
   * cterm + (ascending-subspace ADC sum), the exact association both
   * engines compute, rounded at 4.
   */
-object AnnIvfPq {
+object AnnIvfPq extends graft.QueryModule {
 
   val SubDim = AnnPq.SubDim
   val NSub = AnnPq.NSub

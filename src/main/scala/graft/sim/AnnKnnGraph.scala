@@ -54,7 +54,7 @@ import graft.functions.HashExprs
   * ADOPTED via reverse edges in later rounds; nodes whose candidate set
   * stays empty emit no rows (declared — an empty neighbor list, not a
   * fabricated one). */
-object AnnKnnGraph {
+object AnnKnnGraph extends graft.QueryModule {
 
   val K = 8
   val SearchK = 16

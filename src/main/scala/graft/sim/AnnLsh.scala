@@ -33,7 +33,7 @@ import graft.functions.HashExprs
   * so none is applied; the scale lever for bucket density is band width
   * (more sign bits per band as the corpus grows), not occupancy cuts.
   */
-object AnnLsh {
+object AnnLsh extends graft.QueryModule {
 
   val Planes = 16
   val BandBits = 4

@@ -35,7 +35,7 @@ import graft.dedup.DedupQueries.cosineSql
   * themselves, so correctness means "exactly the approximation specified",
   * not "equals exact search".
   */
-object AnnPq {
+object AnnPq extends graft.QueryModule {
 
   val SubDim = 8
   val NSub = Kmeans.Dim / SubDim

@@ -31,7 +31,7 @@ import graft.dedup.DedupQueries.{cosine, cosineSql}
   * only |queries|×HamCand candidate rows ever fetch float vectors for the
   * exact-cosine rerank.
   */
-object BinaryEmb {
+object BinaryEmb extends graft.QueryModule {
 
   val Dim = Kmeans.Dim
   /** Queries = first NQueries vec_ids (the ann-family convention). */

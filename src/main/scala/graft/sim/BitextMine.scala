@@ -52,7 +52,7 @@ import graft.functions.HashExprs
   * stats are two per-vector windows over candidate rows (candidate mass
   * is band-collision-bounded, the `dedup_embedding_lsh` posture); the
   * readout is one per-source argmax window. No all-pairs anywhere. */
-object BitextMine {
+object BitextMine extends graft.QueryModule {
 
   val LangA = 0
   val LangB = 1

@@ -40,7 +40,7 @@ import graft.dedup.DedupQueries.{cosine, cosineSql}
   * trade); `ScaleModeSpec` pins the batched picks to a driver replay and
   * the scan count to ⌈log₂K⌉.
   */
-object KCenter {
+object KCenter extends graft.QueryModule {
 
   val K = 8
 

@@ -25,7 +25,7 @@ import graft.dedup.DedupQueries.{cosine, cosineSql}
   * count is fixed and small; nothing grows with corpus size except the one
   * scan per iteration.
   */
-object Kmeans {
+object Kmeans extends graft.QueryModule {
 
   /** K scales with corpus size — the SemDeDup paper's own answer to the
     * per-cluster quadratic term (arXiv:2303.09540 uses ~100k clusters over

@@ -35,7 +35,7 @@ import graft.dedup.DedupQueries.{cosine, cosineSql}
   * sub-linearly). Everything after operates on the |queries|×CandK
   * candidate microframe and its within-query pairs — bounded rows
   * independent of corpus size, no driver-side state. */
-object Mmr {
+object Mmr extends graft.QueryModule {
 
   val CandK = 16
   val SelectK = 5

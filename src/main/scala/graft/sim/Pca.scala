@@ -34,7 +34,7 @@ import graft.Tables
   * the driver gate; PcaSpec independently pins orthonormality, the eigen
   * equation on a driver-side covariance replay, spectral ordering against
   * per-column score variance, and the projection arithmetic itself. */
-object Pca {
+object Pca extends graft.QueryModule {
 
   val PcDims = 8
   val EmbDims = 64
@@ -190,9 +190,8 @@ object Pca {
     * frozen canary. A `def`: the literals must train on the corpus the
     * dump targets, known only at Verify time. */
   def oracles: Map[String, String] = Map(
-    "emb_pca" -> (graft.OracleContext.get match {
-      case None => graft.OracleContext.Placeholder
-      case Some((s, dir)) => trainedModel(s, dir) match {
+    "emb_pca" -> graft.OracleContext.rendered { (s, dir) =>
+      trainedModel(s, dir) match {
         case None =>
           "SELECT vec_id, " +
             (0 until PcDims).map(k => s"0.0 AS p$k").mkString(", ") +
@@ -209,5 +208,5 @@ object Pca {
           s"""SELECT vec_id, ${scoreCols.mkString(",\n ")}
              |FROM embeddings ORDER BY vec_id""".stripMargin
       }
-    }))
+    })
 }

@@ -24,7 +24,7 @@ import graft.Tables
   * a literal); quantization is one map-side `transform` pass inside
   * codegen — zero joins, zero shuffles beyond the output sort.
   */
-object QuantizeInt8 {
+object QuantizeInt8 extends graft.QueryModule {
 
   val Dim = Kmeans.Dim
 

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * (map-side chains, broadcast query sides); each intersection is a
   * left-semi join on (q_id, n_id) — |queries|·k rows — and the readout an
   * 8·|queries|-row aggregate. Evaluation adds nothing super-linear. */
-object RecallEval {
+object RecallEval extends graft.QueryModule {
 
   /** Every approximate variant the engine ships, with its registered
     * query fn and its DuckDB oracle (composed verbatim — except the two

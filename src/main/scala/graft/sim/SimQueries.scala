@@ -16,7 +16,7 @@ import graft.dedup.DedupQueries.{cosine, cosineSql}
   * aggregation because rows were pre-filtered per partition by rank). The
   * LSH-bucketed variant (AnnLsh.scala) is the sub-linear scale path.
   */
-object SimQueries {
+object SimQueries extends graft.QueryModule {
 
   /** #24 Brute-force cosine top-10 for the first 10 vectors as queries. */
   def annTopkBrute(s: SparkSession, dir: String): DataFrame = {

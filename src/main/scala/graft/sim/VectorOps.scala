@@ -9,7 +9,7 @@ import graft.Tables
   * symmetric int8 quantization — the two transforms every embedding corpus
   * goes through before ANN serving. Map-side only, no shuffle at any scale.
   */
-object VectorOps {
+object VectorOps extends graft.QueryModule {
 
   /** #24b: per-vector L2 norm, normalized (rounded) vector, and int8
     * quantization scale + codes. Array-valued results are emitted as

@@ -32,7 +32,7 @@ import graft.Tables
   * hash-checks whitening end to end under the MODEL-AS-LITERAL oracle.
   * An axis with λ ≤ 1e−12 (degenerate corpus) emits NULL instead of an
   * exploding 1/√λ, and drops out of maha2 (declared). */
-object Whiten {
+object Whiten extends graft.QueryModule {
 
   val MahaOutlier = 20.09 // χ²(PcDims=8) 0.99 quantile, declared constant
   val MinVar = 1e-12
@@ -78,9 +78,8 @@ object Whiten {
     * the left-associated sum of squares of the rounded coordinate
     * columns in a wrapping SELECT. */
   def oracles: Map[String, String] = Map(
-    "emb_whiten" -> (graft.OracleContext.get match {
-      case None => graft.OracleContext.Placeholder
-      case Some((s, dir)) => Pca.trainedModel(s, dir) match {
+    "emb_whiten" -> graft.OracleContext.rendered { (s, dir) =>
+      Pca.trainedModel(s, dir) match {
         case None =>
           "SELECT vec_id, " +
             (0 until Pca.PcDims).map(k => s"0.0 AS w$k").mkString(", ") +
@@ -107,5 +106,5 @@ object Whiten {
              |  $mahaExpr AS maha2
              | FROM embeddings) z ORDER BY vec_id""".stripMargin
       }
-    }))
+    })
 }

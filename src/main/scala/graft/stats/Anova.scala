@@ -34,7 +34,7 @@ import graft.Tables
   *
   * Scale: ONE fact pass → |types|-key map-side integer sums; the global
   * row is one aggregate of the |types|-row frame. Nothing else moves. */
-object Anova {
+object Anova extends graft.QueryModule {
 
   /** χ² 0.99 quantiles for df 1..12 (frozen, committed). */
   val Chi2Crit99: Seq[Double] = Seq(

@@ -46,7 +46,7 @@ import graft.Tables
   * doubles per type — the `emb_kmeans` bounded-artifact pattern). Range
   * trade declared: Σ(k·vi) < 7·10⁴·|v|max·n — BIGINT-safe below ~10¹⁴
   * rows per type at |v|max = 10³. */
-object Bootstrap {
+object Bootstrap extends graft.QueryModule {
 
   /** Bootstrap replicates. */
   val B = 64

@@ -37,7 +37,7 @@ import graft.Tables
   * broadcast. At 100 TB the aggregates are |types|·|users| resp.
   * |types|·|distinct cents| rows: still cluster-trivial, and the windows
   * partition by type so no single-task global sort exists. */
-object Concentration {
+object Concentration extends graft.QueryModule {
 
   /** Concentration flag threshold: G ≥ 0.4 ("top-heavy feed"). */
   val GiniFlag = 0.4

@@ -26,7 +26,7 @@ import graft.Tables
   * Scale posture: one fact pass → |types × days| aggregate; the pair
   * self-join runs on the aggregate (≤ |types|² · days rows), never on
   * facts; the pair groupBy is map-side combinable. */
-object Correlation {
+object Correlation extends graft.QueryModule {
 
   def corrMatrix(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)

@@ -32,7 +32,7 @@ import graft.Tables
   * implementation-private. Probes absent from the corpus estimate as the
   * pure collision mass of their buckets (≥ 0), never null.
   */
-object CountMin {
+object CountMin extends graft.QueryModule {
 
   val D = 4
   val W = 64L

@@ -27,7 +27,7 @@ import graft.Tables
   * The DuckDB oracle is the plain exact top-k: the sketch changes the
   * PLAN, never the answer.
   */
-object HeavyHitters {
+object HeavyHitters extends graft.QueryModule {
 
   val Counters = 256
   val TopK = 20

@@ -39,7 +39,7 @@ import graft.Tables
   * max-aggregate (≤ 64·|groups| rows), a |groups|-row readout. Nothing
   * super-linear, no driver state, mergeable by construction.
   */
-object Hll {
+object Hll extends graft.QueryModule {
 
   /** Register count m (p = 6 index bits). */
   val M = 64

@@ -28,7 +28,7 @@ import graft.Tables
   * theorem), so accuracy here is better than the random-hash K⁻¹ᐟ² bound —
   * the spec checks the weaker random-hash bound.
   */
-object KmvSketch {
+object KmvSketch extends graft.QueryModule {
 
   val K = 64
   val HashP = 2147483647L // 2^31 − 1: hash range M, also the estimator scale

@@ -34,7 +34,7 @@ import graft.Tables
   * Scale: ONE fact pass → ten map-side-combinable integer sums per
   * |types| key; everything after operates on the |types|-row moment
   * frame. Nothing else shuffles, nothing is driver-side. */
-object Linreg {
+object Linreg extends graft.QueryModule {
 
   /** 3×3 determinant, fixed-form (cofactor expansion along row 0). */
   private def det3(a: Array[Array[String]]): String =

@@ -32,7 +32,7 @@ import graft.Tables
   * the |types|²·|days| microframe (≤ 10 pairs × 60 rows here — windows
   * partition per PAIR, the bounded-microframe class), so the corpus-
   * proportional cost is exactly one pass. */
-object MannWhitney {
+object MannWhitney extends graft.QueryModule {
 
   val ZFlag = 1.96
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * rsd=0.02 and the quantile sketch at accuracy=1000 must land within 5%
   * of exact on the test distributions.
   */
-object SketchQueries {
+object SketchQueries extends graft.QueryModule {
 
   def approxReport(s: SparkSession, dir: String): DataFrame = {
     graft.Tables.events(s, dir)

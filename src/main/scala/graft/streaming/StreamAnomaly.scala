@@ -29,7 +29,7 @@ import graft.timeseries.TsQueries
   * The batch twin (`stream_anomaly`, oracle-checked) runs the identical
   * math as one range-frame window over the daily-count aggregate; the spec
   * proves stream ≡ batch however the feed is micro-batched. */
-object StreamAnomaly {
+object StreamAnomaly extends graft.QueryModule {
 
   val HistDays = 28
 

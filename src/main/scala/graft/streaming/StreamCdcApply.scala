@@ -31,7 +31,7 @@ import EventStream.Event
   *
   * The batch twin (`stream_cdc_apply`, FULL oracle) is ONE map-side-
   * combinable max_by groupBy over the fact stream. */
-object StreamCdcApply {
+object StreamCdcApply extends graft.QueryModule {
 
   case class CdcState(bestK: Long, n: Long)
   case class SnapshotRow(user_id: Long, version_event_id: Long,

@@ -37,7 +37,7 @@ import EventStream.Event
   * Processing in key order makes "first B / first C after" greedy-correct;
   * anchors expire the moment an arriving event's time passes their
   * deadline, so state is bounded by anchor density within one gap window. */
-object StreamCep {
+object StreamCep extends graft.QueryModule {
 
   val StageA = "view"
   val StageB = "click"

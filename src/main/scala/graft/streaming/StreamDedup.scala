@@ -13,7 +13,7 @@ import graft.Tables
   * late-data horizon instead of growing with history — the only shape that
   * survives an unbounded stream.
   */
-object StreamDedup {
+object StreamDedup extends graft.QueryModule {
 
   /** Streaming path: exactly-one-per-event_id within the watermark. */
   def dedupStream(events: Dataset[EventStream.Event], watermark: String = "2 hours"): DataFrame =

@@ -30,7 +30,7 @@ import graft.stats.Hll
   * declaratively off one events scan (FULL oracle — the per-day variant
   * of the `stats_hll_distinct` chain); StreamDistinctSpec pins stream ≡
   * batch under 1/5-way micro-batching plus replay-drop. */
-object StreamDistinct {
+object StreamDistinct extends graft.QueryModule {
 
   /** One finalized register row from the upstream windowed max-agg. */
   case class RegRow(event_type: String, epoch_day: Long, bucket: Long, m_j: Long)

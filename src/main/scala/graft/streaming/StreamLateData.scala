@@ -48,7 +48,7 @@ import graft.Tables
   * ~292 years of 1 kHz full-drop arrivals; beyond it Spark (non-ANSI)
   * would wrap where the DuckDB oracle throws. Any real ledger is orders
   * of magnitude inside the envelope. */
-object StreamLateData {
+object StreamLateData extends graft.QueryModule {
 
   val BatchSize = 1000L
   val DelayMinutes = 30L

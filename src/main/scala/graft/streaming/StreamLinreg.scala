@@ -29,7 +29,7 @@ import graft.stats.Linreg
   * over the batch fact frame; its oracle IS the registered
   * `stats_linreg` oracle (the `stream_quality_score` triangle: streaming
   * path ≡ batch twin ≡ cross-engine replay). */
-object StreamLinreg {
+object StreamLinreg extends graft.QueryModule {
 
   /** Streaming-legal scorer: works on any (event_type, y, x1, x2) frame,
     * batch or streaming. Update-mode aggregation + stateless readout. */

@@ -27,7 +27,7 @@ import graft.dedup.MinHashLsh
   * StreamNearDupSpec replays stream-vs-batch equality across micro-batch
   * splits.
   */
-object StreamNearDup {
+object StreamNearDup extends graft.QueryModule {
 
   final case class Doc(doc_id: Long, text: String)
   final case class BucketState(docs: List[(Long, Seq[Long])])
@@ -127,4 +127,8 @@ object StreamNearDup {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_neardup" -> (nearDupBatch _))
+
+  /** Rows-only: MinHash signatures are not SQL-expressible. StreamNearDupSpec
+    * replays stream-vs-batch equality and RowsOnlyCanarySpec pins the output. */
+  val oracles: Map[String, String] = Map.empty
 }

@@ -26,7 +26,7 @@ import graft.text.QualityClassifier
   * (the oracle embeds the registered classifier oracle and projects its
   * margin/score/verdict). Plan: scan → project — the scoring pass carries
   * zero exchanges before the output sort. */
-object StreamQualityScore {
+object StreamQualityScore extends graft.QueryModule {
 
   /** Stateless streaming scorer: works on any (doc_id, text) frame,
     * batch or streaming — the expression is the whole deployment. */

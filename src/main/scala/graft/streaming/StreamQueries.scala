@@ -13,7 +13,7 @@ import graft.Tables
   * are exercised by EventStreamSpec; these batch twins share the exact same
   * windowing/gap semantics so the DuckDB oracle can check them.
   */
-object StreamQueries {
+object StreamQueries extends graft.QueryModule {
 
   val SessionGapSeconds = 1800L
 

@@ -27,7 +27,7 @@ import graft.Tables
   * The batch twin (`stream_topk`, oracle-checked) is the same ranking as
   * one groupBy + per-(type, day) window over the |types × days × users|
   * aggregate — facts are touched once, map-side combinable. */
-object StreamTopK {
+object StreamTopK extends graft.QueryModule {
 
   val TopN = 3
 

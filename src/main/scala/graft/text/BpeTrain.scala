@@ -21,7 +21,7 @@ import graft.Tables
   * Driver check is rows-only: the merges are data-dependent, so no static
   * SQL oracle can state them.
   */
-object BpeTrain {
+object BpeTrain extends graft.QueryModule {
 
   val NumMerges = 10
 
@@ -286,14 +286,12 @@ object BpeTrain {
     * literal vocab trains on the corpus the dump targets. `text_bpe_vocab`
     * stays rows-only (its OUTPUT is the data-dependent trainer state). */
   def oracles: Map[String, String] = Map(
-    "text_bpe_apply" -> (graft.OracleContext.get match {
-      case None => graft.OracleContext.Placeholder
-      case Some((s, dir)) =>
-        val dict = wordCounts(s, dir)
-        val merges = trainMerges(s, dir)
-        val wordSyms = dict.map { case (w, _) => w -> symbolsOf(w, merges) }
-        val vocab = wordSyms.iterator.flatMap(_._2).toSet.toSeq.sorted
-        val ids = vocab.iterator.zipWithIndex.map { case (t, i) => t -> i.toLong }.toMap
-        applyOracleSql(wordSyms.toSeq.map { case (w, syms) => w -> syms.map(ids) })
-    }))
+    "text_bpe_apply" -> graft.OracleContext.rendered { (s, dir) =>
+      val dict = wordCounts(s, dir)
+      val merges = trainMerges(s, dir)
+      val wordSyms = dict.map { case (w, _) => w -> symbolsOf(w, merges) }
+      val vocab = wordSyms.iterator.flatMap(_._2).toSet.toSeq.sorted
+      val ids = vocab.iterator.zipWithIndex.map { case (t, i) => t -> i.toLong }.toMap
+      applyOracleSql(wordSyms.toSeq.map { case (w, syms) => w -> syms.map(ids) })
+    })
 }

@@ -29,7 +29,7 @@ import graft.Tables
   * assumption on the vocab), two one-row total frames broadcast in, and
   * a top-[[TopK]] rank (WindowGroupLimit pushes the cut before the
   * exchange). Nothing quadratic, no driver state. */
-object Collocations {
+object Collocations extends graft.QueryModule {
 
   /** Noise floor: a collocation must occur at least this often. */
   val MinPairCount = 5

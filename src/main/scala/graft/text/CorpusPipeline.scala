@@ -20,7 +20,7 @@ import graft.dedup.{DedupClusters, DedupQueries}
   * the per-shard packing window; the benchmark set rides along as a
   * broadcast.
   */
-object CorpusPipeline {
+object CorpusPipeline extends graft.QueryModule {
 
   /** Stages 1-5 (quality gate → exact dedup → near-dup canonicalization →
     * decontamination → deterministic sample): the cleaned corpus both

@@ -43,7 +43,7 @@ import graft.Tables
   * Scale: the lm chain's own posture + ONE map-side histogram aggregate
   * + the bounded-histogram window + a 3-row broadcast threshold join +
   * a map-side shard hash. Nothing global, nothing driver-side. */
-object Curriculum {
+object Curriculum extends graft.QueryModule {
 
   val Stages = 4
   val Shards = 64L

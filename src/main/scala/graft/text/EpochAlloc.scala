@@ -39,7 +39,7 @@ import graft.Tables
   * `text_perplexity_buckets`' histogram window); the budget is a
   * one-row broadcast cross. Corpus-proportional work is exactly one
   * aggregate pass. */
-object EpochAlloc {
+object EpochAlloc extends graft.QueryModule {
 
   val MaxEpochs = 4
   val BudgetNum = 5L

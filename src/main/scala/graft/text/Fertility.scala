@@ -40,7 +40,7 @@ import graft.Tables
   * join broadcasts the ≤|langs| English row. Oracle is MODEL-AS-LITERAL
   * (`graft.OracleContext`): both learned word→count tables interpolate as
   * one VALUES literal and DuckDB replays the whole audit cross-engine. */
-object Fertility {
+object Fertility extends graft.QueryModule {
 
   val EnLang = "en"
 
@@ -141,8 +141,5 @@ object Fertility {
   }
 
   def oracles: Map[String, String] = Map(
-    "text_tokenizer_fertility" -> (graft.OracleContext.get match {
-      case None => graft.OracleContext.Placeholder
-      case Some((s, dir)) => fertilityOracleSql(s, dir)
-    }))
+    "text_tokenizer_fertility" -> graft.OracleContext.rendered(fertilityOracleSql))
 }

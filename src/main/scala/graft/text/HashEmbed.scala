@@ -29,7 +29,7 @@ import graft.Tables
   * window partitions per doc over ≤ Dims rows. The 40-bit md5-prefix
   * token hash is the shared `text_ngram_freq`/`dedup` convention —
   * identical in both engines. */
-object HashEmbed {
+object HashEmbed extends graft.QueryModule {
 
   val Dims = 64L
 

@@ -46,7 +46,7 @@ import graft.Tables
   * mergeable, one pass, no total order) — the paper itself samples rather
   * than ranks exactly — with only the boundary docs differing.
   */
-object ImportanceResample {
+object ImportanceResample extends graft.QueryModule {
 
   val Buckets = 1024L // 16^6 mod 2^10 = 0: the 6-hex-char bucket is unbiased
   val TargetLang = "en"

@@ -34,7 +34,7 @@ import graft.Tables
   * raw bigram stream), joined back on uniform single-word keys — AQE
   * broadcasts them when small, hash-joins otherwise. Nothing quadratic,
   * no windows. */
-object KnCounts {
+object KnCounts extends graft.QueryModule {
 
   def knCounts(s: SparkSession, dir: String): DataFrame = {
     graft.functions.HashExprs.register(s)

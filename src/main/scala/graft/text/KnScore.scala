@@ -45,7 +45,7 @@ import graft.Tables
   * word, then second word — AQE broadcasts the vocabulary-sized sides)
   * and one per-doc re-aggregate. T rides as a bounded driver scalar
   * (the `text_lm_score` V pattern), mirrored as a scalar subquery. */
-object KnScore {
+object KnScore extends graft.QueryModule {
 
   val SuspectBits = 4.5
 

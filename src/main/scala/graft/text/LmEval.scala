@@ -31,7 +31,7 @@ import graft.Tables
   * vocabulary-sized counts off the cached train slice; scoring joins on
   * uniform bigram/word keys; the report is a ≤3-row aggregate. All
   * counts exact integers; avg_bits is the one fixed-form readout. */
-object LmEval {
+object LmEval extends graft.QueryModule {
 
   def lmEval(s: SparkSession, dir: String): DataFrame = {
     // the staged LM bigram rung carries the split assignment already

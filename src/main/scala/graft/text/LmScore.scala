@@ -31,7 +31,7 @@ import graft.Tables
   * count — the PageRank `n` pattern), mirrored as a scalar subquery in
   * the oracle. At 100 TB the model tables are vocabulary-sized, far
   * smaller than the corpus, and nothing is driver-side but V. */
-object LmScore {
+object LmScore extends graft.QueryModule {
 
   val SuspectBits = 4.5
 

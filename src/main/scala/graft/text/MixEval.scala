@@ -32,7 +32,7 @@ import graft.Tables
   * Scale: two |langs|-key map-side-combinable counts (one over the corpus,
   * one over the sampler's output) + a one-row total broadcast — nothing
   * beyond the sampler's own cost at any corpus size. */
-object MixEval {
+object MixEval extends graft.QueryModule {
 
   def mixEval(s: SparkSession, dir: String): DataFrame = {
     val full = Tables.documents(s, dir)

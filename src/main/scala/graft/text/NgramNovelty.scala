@@ -30,7 +30,7 @@ import graft.Tables
   * shingle-keyed against the 1-row-per-shingle min table (hash join —
   * high-df boilerplate shingles fan out rows but the build side stays one
   * row per key); one per-doc re-aggregate. Nothing quadratic. */
-object NgramNovelty {
+object NgramNovelty extends graft.QueryModule {
 
   val DerivativeMax = 0.5
 

@@ -34,7 +34,7 @@ import graft.Tables
   * bounded-frame cumsum (the `sample_pps_systematic` SinglePartition-on-
   * bounded-rows class) + one broadcast map-side bucket join. Nothing
   * corpus-sized ever sits in one partition. */
-object PerplexityBuckets {
+object PerplexityBuckets extends graft.QueryModule {
 
   def perplexityBuckets(s: SparkSession, dir: String): DataFrame =
     bucketsOf(LmScore.queries("text_lm_score")(s, dir)

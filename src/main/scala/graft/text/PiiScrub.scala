@@ -28,7 +28,7 @@ import graft.Tables
   * CC) so the digest is stable; the shapes are mutually non-overlapping
   * (dashes vs dots vs contiguous digits), so order affects no current
   * class pair. Map-side only; the audit adds one 6-key aggregate. */
-object PiiScrub {
+object PiiScrub extends graft.QueryModule {
 
   val EmailPat = "[a-z0-9._%+-]+@[a-z0-9.-]+[.][a-z]{2,}"
   val PhonePat = "[0-9]{3}-[0-9]{3}-[0-9]{4}"

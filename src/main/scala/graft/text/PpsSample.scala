@@ -31,7 +31,7 @@ import graft.Tables
   * selection predicate ((cum div step) − ((cum−w) div step) ≥ 1) is
   * map-side; nothing wide ever shuffles.
   */
-object PpsSample {
+object PpsSample extends graft.QueryModule {
 
   /** Target sample size: step = max(totalW div TargetN, 1). */
   val TargetN = 64

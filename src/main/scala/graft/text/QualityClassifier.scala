@@ -57,7 +57,7 @@ import graft.{CacheRegistry, Tables}
   * aggregate. The trained model memoizes per corpus fingerprint (the
   * `Kmeans.trainedCentroids` install-then-train pattern: entries build
   * outside the map's bin locks). */
-object QualityClassifier {
+object QualityClassifier extends graft.QueryModule {
 
   /** Hashed-bigram feature buckets (dense aux features live above). */
   val Dims = 64

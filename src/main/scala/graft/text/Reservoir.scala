@@ -23,7 +23,7 @@ import graft.Tables
   *
   * Scale: one map-side projection (md5 of an 8-byte id), one TakeOrdered
   * of k rows per partition; zero shuffles, zero windows. */
-object Reservoir {
+object Reservoir extends graft.QueryModule {
 
   /** Reservoir size k. */
   val TargetK = 64

@@ -26,7 +26,7 @@ import graft.Tables
   *
   * Scale posture: pure map-side codegen projection — one corpus scan, zero
   * shuffles at any size (the trailing orderBy is presentation only). */
-object SampleSplit {
+object SampleSplit extends graft.QueryModule {
 
   val Buckets = 1048576L            // 2^20
   val TrainThreshold = 943718L      // round(0.90 * 2^20)

@@ -11,7 +11,7 @@ import graft.Tables
   * no shuffle at any scale — built from codegen'd higher-order functions
   * (no UDFs in the hot path).
   */
-object TextQueries {
+object TextQueries extends graft.QueryModule {
 
   private def words(c: Column): Column = split(c, "\\s+")
 

@@ -42,7 +42,7 @@ import graft.Tables
   * Trust instead: `UnigramSpec` replays the full trainer independently
   * (memoized recursion vs the iterative DP here) and
   * `RowsOnlyCanarySpec` pins the complete frozen-fixture output. */
-object UnigramTrain {
+object UnigramTrain extends graft.QueryModule {
 
   val SeedMaxLen = 4
   val SeedSize = 200
@@ -236,15 +236,13 @@ object UnigramTrain {
     * covered, and `text_unigram_vocab` stays rows-only (its OUTPUT is the
     * trainer state). */
   def oracles: Map[String, String] = Map(
-    "text_unigram_apply" -> (graft.OracleContext.get match {
-      case None => graft.OracleContext.Placeholder
-      case Some((s, dir)) =>
-        val dict = BpeTrain.wordCounts(s, dir)
-        val model = trainedModel(s, dir)
-        val lp = model.map { case (p, (_, l)) => p -> l }
-        val ids = model.toSeq.sortBy { case (p, (c, _)) => (-c, p) }.zipWithIndex
-          .map { case ((p, _), r) => p -> (r.toLong + 1L) }.toMap
-        BpeTrain.applyOracleSql(
-          dict.toSeq.map { case (w, _) => w -> viterbi(w, lp).map(ids) })
-    }))
+    "text_unigram_apply" -> graft.OracleContext.rendered { (s, dir) =>
+      val dict = BpeTrain.wordCounts(s, dir)
+      val model = trainedModel(s, dir)
+      val lp = model.map { case (p, (_, l)) => p -> l }
+      val ids = model.toSeq.sortBy { case (p, (c, _)) => (-c, p) }.zipWithIndex
+        .map { case ((p, _), r) => p -> (r.toLong + 1L) }.toMap
+      BpeTrain.applyOracleSql(
+        dict.toSeq.map { case (w, _) => w -> viterbi(w, lp).map(ids) })
+    })
 }

@@ -32,7 +32,7 @@ import graft.Tables
   * exchange — never a full vocab sort); moments are a |langs|-key
   * aggregate. Languages with fewer than [[MinPoints]] fitted points are
   * dropped (a 2-point line fits anything). */
-object ZipfFit {
+object ZipfFit extends graft.QueryModule {
 
   /** Fit over the head of the distribution (the Zipf regime; the deep
     * tail is count-1 noise that fits nothing). */

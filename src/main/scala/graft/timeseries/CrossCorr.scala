@@ -28,7 +28,7 @@ import graft.Tables
   * AGGREGATE ×(2·MaxLag+1), never facts; the pair join keys on
   * (event_type, day) — uniform by construction; the peak window partitions
   * by pair over ≤ 2·MaxLag+1 rows. */
-object CrossCorr {
+object CrossCorr extends graft.QueryModule {
 
   val MaxLag = 7L
   val MinPairs = 8L

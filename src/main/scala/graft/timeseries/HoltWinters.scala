@@ -41,7 +41,7 @@ import graft.Tables
   * posture); seasonal/level/trend are |types|- or |types×7|-key map-side
   * aggregates; the horizon explode multiplies the |types|-row moment frame
   * ×7. Nothing but aggregates of the daily frame ever shuffles. */
-object HoltWinters {
+object HoltWinters extends graft.QueryModule {
 
   import TsQueries.{EwmaWindow, EwmaWeights, ForecastH}
 

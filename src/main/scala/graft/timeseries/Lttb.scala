@@ -44,7 +44,7 @@ import graft.Tables
   * broadcast join back; one map-side score + min_by per bucket (partial
   * aggregates — the argmax never shuffles raw points). No global sort, no
   * corpus-wide window. */
-object Lttb {
+object Lttb extends graft.QueryModule {
 
   /** Output budget: the downsample's target bucket count. */
   val Buckets = 512L

@@ -26,7 +26,7 @@ import graft.Tables
   * pairwise sign sum self-joins THAT aggregate on the uniform type key
   * (≤ |types|·days² rows — the `stats_corr` aggregate-not-facts posture);
   * ties and n come from map-side-combinable counts of the same frame. */
-object MannKendall {
+object MannKendall extends graft.QueryModule {
 
   /** Two-sided 5% normal bound. */
   val ZBound = 1.96

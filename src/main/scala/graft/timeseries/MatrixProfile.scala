@@ -34,7 +34,7 @@ import graft.Tables
   * all-pairs stage is a |types|·26² bounded microframe after one
   * map-side daily aggregate over the fact stream; the subsequence
   * arrays are 5-element window collects. Nothing corpus-quadratic. */
-object MatrixProfile {
+object MatrixProfile extends graft.QueryModule {
 
   val M = 5
   val Excl = 3 // exclusion zone ⌈m/2⌉: |i-j| < Excl is a trivial match

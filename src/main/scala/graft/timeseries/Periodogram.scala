@@ -45,7 +45,7 @@ import graft.Tables
   * TS posture); the ×13 period explode multiplies the DAILY frame, not
   * facts; the trig join broadcasts 104 rows; everything after is
   * |types×13|-key map-side aggregates. */
-object Periodogram {
+object Periodogram extends graft.QueryModule {
 
   val Scale: Long = 1L << 20
   val MinPeriod = 2

@@ -28,7 +28,7 @@ import graft.Tables
   * trailing window materializes as a ×7 contribution explode of that
   * AGGREGATE (the `ts_ewma` fan-out pattern), never of facts; ranking
   * windows partition by (type, day) over ≤ 7 rows. */
-object RollingQuantile {
+object RollingQuantile extends graft.QueryModule {
 
   val WindowDays = 7L
 

@@ -30,7 +30,7 @@ import graft.Tables
   * key (days², never facts² — the `stats_corr` posture), and each median
   * is a per-type window sort of that bounded ledger (rank-select, no
   * driver-side collect of the pair set). */
-object TheilSen {
+object TheilSen extends graft.QueryModule {
 
   /** Rank-select the declared median of `valCol` per type: keep the two
     * (or one) middle positions, reduce with (min+max)/2. */

@@ -18,7 +18,7 @@ import graft.Tables
   * aggregated |types × days| rows, thousands of rows at 100 TB, not
   * billions. The explode multiplies a per-type min/max row, never facts.
   */
-object TsQueries {
+object TsQueries extends graft.QueryModule {
 
   /** Per-type daily aggregate — the single pass over the fact table that
     * both operators share. `minValue` thins to a sparse signal: the raw

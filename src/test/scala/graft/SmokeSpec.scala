@@ -7,11 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SmokeSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  test("every oracle key has a query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle entries without queries: $missing")
-  }
-
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

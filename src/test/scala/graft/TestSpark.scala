@@ -2,18 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole suite (Test / fork := true). */
+/** One shared local session for the whole suite (Test / fork := true),
+  * on every core the forked JVM sees: build.sbt caps each test group's
+  * processor count at its share of the machine. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.local(Runtime.getRuntime.availableProcessors())
   val sf: String = "/root/testdata/sf0.001"
 }
