@@ -4,42 +4,45 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Session-scoped staged-artifact registry with SUPERSEDE EVICTION.
+/** The one session-artifact memo: every artifact graft builds once and
+  * shares across queries — staged ladder rungs, trained models, tokenizer
+  * dictionaries, the incremental near-dup signature store — resolves here.
   *
-  * The staging ladder (MinHash sketch → banded pair counts → inverted
-  * shingle index → verified pair graph) materializes each rung as an eager
-  * `localCheckpoint` shared by every consumer in the session — the
-  * in-session form of the parquet tables a nightly 100 TB pipeline writes
-  * between jobs. The artifact deliberately outlives any one query
-  * (`CacheRegistry`'s per-query release never touches it), which creates
-  * the one leak that contract allows: a long-lived session whose corpus is
-  * REWRITTEN re-keys on the new content fingerprint and, without eviction,
-  * the superseded checkpoint's blocks stay pinned on executors until app
-  * exit.
+  * KEY. An entry is keyed on (appId, artifact name) and carries its input's
+  * content fingerprint (normally `sources.TableFingerprint`, a file
+  * listing) as a VALUE. Resolving a name at the entry's fingerprint returns
+  * the built value: one `ConcurrentHashMap.get` plus a string compare, zero
+  * recompute. Spark writes fresh part-file names on every overwrite, so a
+  * rewrite in place — even a same-size one — changes the fingerprint.
   *
-  * This registry closes that: entries key on (appId, artifact name) and
-  * carry their content fingerprint as a VALUE. When a key re-resolves to a
-  * new fingerprint, the stale entry's checkpoint RDD is unpersisted (its
-  * blocks leave executor storage immediately; the data is stale by
-  * definition, so losing it is correct) before the fresh build's result is
-  * handed out. Entries for other artifacts — including other dirs of the
-  * same family — are never touched. `StagedEvictionSpec` proves the
+  * BUILD ONCE. The build runs OUTSIDE the map's bin locks (a ladder rung
+  * builds by staging its parent rung — a nested resolve — and
+  * ConcurrentHashMap.compute forbids that recursion; a multi-iteration
+  * training job is also far too long for a bin lock). Each entry memoizes
+  * its value under its own monitor, so concurrent resolvers of ONE
+  * artifact at one fingerprint run the build once and share its result,
+  * while different artifacts (including a rung and its parent) never share
+  * a lock — the ladder is a DAG, so no cycle exists.
+  *
+  * SUPERSEDE. A resolve at a new fingerprint installs a fresh entry in the
+  * stale one's place and calls the stale value's `release` (if it ever
+  * built) exactly once before the fresh build's result is handed out: a
+  * checkpointed rung unpersists its blocks, the signature store deletes
+  * its directory, a driver-side model just drops its reference. Entries
+  * for other names — including other dirs of the same family — are never
+  * touched. `clear(prefix)` drops and releases every entry whose name
+  * starts with `prefix`; it is the explicit-invalidation hook behind the
+  * per-family `clear*Cache()` entry points, so each family's names start
+  * with a prefix no other family's do. `StagedEvictionSpec` proves the
   * contract end to end.
   *
-  * Concurrency: the build runs OUTSIDE the map's bin locks (a ladder rung
-  * builds by staging its parent rung — a nested `stage` call — and
-  * ConcurrentHashMap.compute forbids that recursion). Each entry memoizes
-  * its frame under its own monitor, so concurrent builders of ONE artifact
-  * serialize while different artifacts (including a rung and its parent)
-  * never share a lock — the ladder is a DAG, so no cycle exists.
-  *
-  * SUPERSEDE vs IN-FLIGHT READERS (contract, not a bug): eviction is
+  * SUPERSEDE vs IN-FLIGHT READERS (contract, not a bug): release is
   * immediate by design — the stale data is wrong by definition, and a
   * nightly session cannot afford to pin 100 TB-scale checkpoint blocks
   * behind a grace period. A `localCheckpoint` truncates lineage, so a
   * reader that obtained the OLD fingerprint's frame and is still running
   * jobs on it when a supersede lands will fail ("checkpoint block not
-  * found") rather than silently recompute. Callers that rewrite a staged
+  * found") rather than silently recompute. Callers that rewrite an
   * artifact's source concurrently with readers of the old generation must
   * quiesce those readers first (the gate and every in-repo consumer run
   * read-then-supersede sequentially; `clear(prefix)` has the same
@@ -47,28 +50,47 @@ import org.apache.spark.sql.execution.LogicalRDD
   * only fires on a fingerprint change. */
 object StagedArtifacts {
 
-  private final class Entry(val fingerprint: String, build0: () => DataFrame) {
-    private var built: DataFrame = null
+  private final class Entry[T](val fingerprint: String, build0: () => T,
+      release: T => Unit) {
+    private var built: Option[T] = None
     /** Memoized build — at most one builder runs per entry. */
-    def df: DataFrame = synchronized {
-      if (built == null) built = build0()
-      built
+    def value: T = synchronized {
+      if (built.isEmpty) built = Some(build0())
+      built.get
     }
-    /** Release checkpoint blocks if (and only if) this entry ever built. */
-    def unpersistIfBuilt(): Unit = synchronized {
-      if (built != null) unpersistCheckpoint(built)
-    }
+    /** Release the value if (and only if) this entry ever built. */
+    def releaseIfBuilt(): Unit = synchronized(built.foreach(release))
   }
 
   private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+    new java.util.concurrent.ConcurrentHashMap[String, Entry[_]]()
 
-  /** Resolve artifact `name` at content `fingerprint`, building (and
-    * staging — `build` must return an eagerly-materialized frame, normally
-    * `localCheckpoint(true)`) on first use or on supersede. Same
-    * fingerprint → the staged frame, zero recompute. New fingerprint →
-    * the stale entry's checkpoint is unpersisted and the fresh build
-    * replaces it.
+  /** Resolve artifact `name` at content `fingerprint`: the built value on
+    * a hit, else `build` (run once, outside the map's locks) with the
+    * superseded value, if any, passed to its entry's `release`. */
+  def memo[T](s: SparkSession, name: String, fingerprint: String,
+      release: T => Unit)(build: => T): T = {
+    val key = s"${s.sparkContext.applicationId}#$name"
+    while (true) {
+      val cur = entries.get(key)
+      if (cur != null && cur.fingerprint == fingerprint)
+        return cur.asInstanceOf[Entry[T]].value
+      val fresh = new Entry[T](fingerprint, () => build, release)
+      val installed =
+        if (cur == null) entries.putIfAbsent(key, fresh) == null
+        else entries.replace(key, cur, fresh)
+      if (installed) {
+        if (cur != null) cur.releaseIfBuilt()
+        return fresh.value
+      }
+      // lost the install race — re-read and re-decide
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** A staged ladder rung: [[memo]] over an eagerly-materialized frame
+    * (`build` normally ends in `localCheckpoint(true)`) whose release
+    * unpersists the checkpoint's blocks.
     *
     * DISK MODE (opt-in): when `spark.graft.stageDir` (conf) or
     * `SPARK_GRAFT_STAGE_DIR` (env) names a directory, rungs persist there
@@ -81,28 +103,13 @@ object StagedArtifacts {
     * on disk). Completion is judged by Spark's `_SUCCESS` marker, so a
     * torn write rebuilds instead of serving partial data. */
   def stage(s: SparkSession, name: String, fingerprint: String)
-      (build: => DataFrame): DataFrame = {
-    val key = s"${s.sparkContext.applicationId}#$name"
-    val disk = stageRoot(s)
-    while (true) {
-      val cur = entries.get(key)
-      if (cur != null && cur.fingerprint == fingerprint) return cur.df
-      val fresh = new Entry(fingerprint,
-        disk match {
-          case Some(root) => () => diskResolve(s, root, name, fingerprint, () => build)
-          case None => () => build
-        })
-      val installed =
-        if (cur == null) entries.putIfAbsent(key, fresh) == null
-        else entries.replace(key, cur, fresh)
-      if (installed) {
-        if (cur != null) cur.unpersistIfBuilt()
-        return fresh.df
+      (build: => DataFrame): DataFrame =
+    memo[DataFrame](s, name, fingerprint, unpersistCheckpoint) {
+      stageRoot(s) match {
+        case Some(root) => diskResolve(s, root, name, fingerprint, () => build)
+        case None => build
       }
-      // lost the install race — re-read and re-decide
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Whether disk-mode staging is active for this session (the registry's
     * storage column reads this). */
@@ -147,15 +154,14 @@ object StagedArtifacts {
     s.read.parquet(path.toString)
   }
 
-  /** Drop (and unpersist) every entry whose artifact name starts with
-    * `prefix` — the explicit-invalidation hook behind the per-family
-    * `clear*Cache()` entry points. Empty prefix clears everything. */
+  /** Drop (and release) every entry whose artifact name starts with
+    * `prefix`. Empty prefix clears everything. */
   def clear(prefix: String = ""): Unit = {
     val it = entries.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey.substring(e.getKey.indexOf('#') + 1).startsWith(prefix)) {
-        e.getValue.unpersistIfBuilt()
+        e.getValue.releaseIfBuilt()
         it.remove()
       }
     }

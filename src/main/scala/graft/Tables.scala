@@ -90,12 +90,12 @@ object Tables {
       case _ => col("ts") <= cutoff
     }
 
-  /** Reads events under the legacy nanos conf, keeps the rows that
-    * `rawFilter` (if defined for the stored `ts` type) accepts, then
-    * normalizes `ts`. */
+  /** Reads events, keeps the rows that `rawFilter` (if defined for the
+    * stored `ts` type) accepts, then normalizes `ts`. A TIMESTAMP(NANOS)
+    * `ts` reads as LongType under the legacy nanos conf that
+    * [[GraftSession]] sets. */
   private def loadEvents(s: SparkSession, d: String)(
       rawFilter: PartialFunction[DataType, Column]): DataFrame = {
-    s.conf.set(NanosAsLong, "true")
     val raw = table(s, d, "events")
     val stored = raw.schema("ts").dataType
     val kept = rawFilter.lift(stored).fold(raw)(c => raw.filter(c))

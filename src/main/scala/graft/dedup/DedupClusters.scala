@@ -115,18 +115,14 @@ object DedupClusters extends graft.QueryModule {
   }
 
   /** The verified near-dup pair graph as a session-scoped staging artifact
-    * — `Kmeans.centroidCache`'s contract applied to edges: the banded
-    * candidate join + Jaccard verify (the dominant cost) runs ONCE per
-    * (corpus dir, content fingerprint) and every consumer in the session —
-    * `dedup_clusters`, `text_pipeline_report`, `CorpusPipeline.cleaned` —
-    * reads the materialized edge list. This is exactly how a nightly
-    * pipeline stages it (a parquet table between jobs); in-session the
-    * staging is an eager localCheckpoint registered with
-    * [[graft.StagedArtifacts]] (the artifact, like the centroid model,
-    * outlives any one query — CacheRegistry's per-query release deliberately
-    * does not touch it; a corpus rewrite recomputes on the new file-listing
-    * fingerprint AND evicts the superseded checkpoint's blocks;
-    * `clearCache()` is the explicit invalidation). */
+    * ([[graft.StagedArtifacts]]): the banded candidate join + Jaccard
+    * verify (the dominant cost) runs ONCE per (corpus dir, content
+    * fingerprint) and every consumer in the session — `dedup_clusters`,
+    * `text_pipeline_report`, `CorpusPipeline.cleaned` — reads the
+    * materialized edge list. This is exactly how a nightly pipeline stages
+    * it (a parquet table between jobs); in-session the staging is an eager
+    * localCheckpoint, which CacheRegistry's per-query release deliberately
+    * does not touch. `clearCache()` is the explicit invalidation. */
   def clearCache(): Unit = graft.StagedArtifacts.clear("dedupClusters/")
 
   private[graft] def verifiedPairs(s: SparkSession, dir: String): DataFrame =

@@ -79,35 +79,21 @@ object IncrementalNearDup extends graft.QueryModule {
     * pull). */
   def splitId(maxId: Long): Long = (maxId + 1) * 4 / 5
 
-  /** Store build memoized per corpus dir, like any offline warehouse
-    * artifact (the Kmeans centroid-cache pattern): several queries in one
-    * session share the store; `clearStoreCache()` invalidates. The key
-    * carries the documents table's content fingerprint (TableFingerprint —
-    * same contract as the centroid cache), so a rewritten corpus at the
-    * same path rebuilds instead of serving stale signatures. */
-  private val storeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
+  def clearStoreCache(): Unit = graft.StagedArtifacts.clear("incremental/store/")
 
-  def clearStoreCache(): Unit = storeCache.clear()
-
-  private def storeFor(s: SparkSession, dir: String): (Long, String) = {
-    val fp = graft.sources.TableFingerprint.of(s, s"$dir/documents.parquet")
-    val key = s"$dir#$fp"
-    // evict stores superseded by a corpus rewrite (fingerprint changed) —
-    // entry AND on-disk signatures, so a long-lived session doesn't
-    // accumulate one orphaned store per rewrite
-    val it = storeCache.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if (k != key && k.startsWith(dir + "#")) {
-        val old = storeCache.remove(k)
-        if (old != null) {
-          val p = new org.apache.hadoop.fs.Path(old._2)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        }
-      }
-    }
-    storeCache.computeIfAbsent(key, _ => {
+  /** The history store of `dir`, built like any offline warehouse
+    * artifact: a [[graft.StagedArtifacts]] memo on the documents table's
+    * fingerprint, so several queries in one session share it and a
+    * rewritten corpus rebuilds it. Each build writes to a fresh temp dir,
+    * which a supersede or `clearStoreCache()` deletes. Returns (split,
+    * store path). */
+  private[dedup] def storeFor(s: SparkSession, dir: String): (Long, String) =
+    graft.StagedArtifacts.memo[(Long, String)](s, s"incremental/store/$dir",
+      graft.sources.TableFingerprint.of(s, s"$dir/documents.parquet"),
+      { case (_, path) =>
+        val root = new org.apache.hadoop.fs.Path(path).getParent
+        root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true): Unit
+      }) {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val maxId = Option(docs.agg(max(col("doc_id"))).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(-1L)
@@ -116,8 +102,7 @@ object IncrementalNearDup extends graft.QueryModule {
         .resolve("sigstore").toString
       buildStore(docs.filter(col("doc_id") < split), path)
       (split, path)
-    })
-  }
+    }
 
   /** `dedup_incremental`: the new batch deduped against the persisted
     * store. Rows-only for the driver (MinHash is not SQL-expressible); the

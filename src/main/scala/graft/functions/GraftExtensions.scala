@@ -36,8 +36,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     (new FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // opt-in containment-join → cell-equi-join rewrite
-    // (spark.graft.rewriteContainmentJoin=true)
+    // containment-join → cell-equi-join rewrite, routed on the bounds
+    // side's size against spark.sql.autoBroadcastJoinThreshold
     ext.injectOptimizerRule(_ => graft.plans.RewriteContainmentJoin)
     ext.injectFunction(fn("haversine_m", classOf[HaversineMeters],
       { exprs =>

@@ -30,16 +30,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * broadcast nested-loop plan stops being the right answer — 40k NYC
   * intersections, census blocks) — an explicit broadcast hint on the
   * bounds side is advisory and is dropped in that regime. Below the
-  * threshold the join is left alone: a broadcast NLJ over a 5-row zone
-  * dim is already optimal. `spark.graft.rewriteContainmentJoin=true`
-  * forces the rewrite regardless of size (used by RangeJoinSpec to prove
-  * cell ≡ broadcast on the same data);
-  * `spark.graft.rewriteContainmentJoin.auto=false` disables the
-  * size-based routing. */
+  * threshold the join is left alone (a broadcast NLJ over a 5-row zone
+  * dim is already optimal), and so is every join when the threshold is
+  * negative (broadcast off). */
 object RewriteContainmentJoin extends Rule[LogicalPlan] with PredicateHelper {
 
-  val ConfKey = "spark.graft.rewriteContainmentJoin"
-  val AutoKey = "spark.graft.rewriteContainmentJoin.auto"
   val CellDeg = 0.05
   private val CellStride = 100000L
 
@@ -50,19 +45,14 @@ object RewriteContainmentJoin extends Rule[LogicalPlan] with PredicateHelper {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val force = conf.getConfString(ConfKey, "false") == "true"
-    val auto = conf.getConfString(AutoKey, "true") == "true"
-    if (!force && !auto) return plan
-    def overBroadcast(p: LogicalPlan): Boolean = {
-      val thr = conf.autoBroadcastJoinThreshold
-      thr >= 0 && p.stats.sizeInBytes > thr
-    }
+    val thr = conf.autoBroadcastJoinThreshold
+    if (thr < 0) return plan
     plan.transform {
       case j @ Join(left, right, jt @ (Inner | LeftOuter), Some(cond), hint)
           // fixed-point guard: the rewritten join keeps the original
           // predicate as residual, so it must not match again
           if !cond.references.exists(_.name.startsWith("_gcell")) &&
-            (force || overBroadcast(right)) =>
+            right.stats.sizeInBytes > thr =>
         val dims = matchIntervalDims(left, right, cond)
         // by the time this rule runs, constant bounds (e.g. literal lat
         // limits) have been folded and pushed out of the join — match on

@@ -61,36 +61,12 @@ object Kmeans extends graft.QueryModule {
   /** Trained centroids are a tiny offline ARTIFACT (K×Dim doubles) — real
     * pipelines train once and every consumer (SemDeDup, cosine dedup, IVF)
     * reuses the model rather than re-running Lloyd. Training is fully
-    * deterministic, so memoizing per (corpus dir, iters, row count) changes
-    * no result — it removes the redundant re-train when several queries
-    * share one session (exactly the shape of a daily pipeline run). The
-    * key carries a CONTENT fingerprint (file names, sizes, mtimes of the
-    * embeddings table), so any rewrite of the data — even an in-place
-    * same-size one — retrains: Spark writes fresh UUID part-file names on
-    * every overwrite, so the fingerprint cannot miss it. `clearCache()`
-    * remains for explicit invalidation. Supersede-evicting like the
-    * checkpointed staging rungs ([[graft.StagedArtifacts]]'s contract):
-    * the MODEL identity (dir, iters, subset) is the map key and the
-    * fingerprint a value check, so a rewritten corpus replaces the stale
-    * model instead of accumulating one dead entry per rewrite (driver
-    * arrays, not executor blocks — a bound on map growth, not storage). */
-  private final class ModelEntry(val fingerprint: String,
-      build0: () => Array[Array[Double]]) {
-    private var built: Array[Array[Double]] = null
-    /** Memoized train — at most one trainer runs per entry, under the
-      * entry's OWN monitor, never the map's bin locks (the
-      * [[graft.StagedArtifacts]] Entry pattern: CHM.compute bodies must be
-      * short, and a multi-iteration Spark job is not). */
-    def value: Array[Array[Double]] = synchronized {
-      if (built == null) built = build0()
-      built
-    }
-  }
-
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelEntry]()
-
-  def clearCache(): Unit = centroidCache.clear()
+    * deterministic, so memoizing the model (a [[graft.StagedArtifacts]]
+    * memo named by corpus dir, iters and subset, fingerprinted by row
+    * count and the embeddings table's content) changes no result — it
+    * removes the redundant re-train when several queries share one
+    * session (exactly the shape of a daily pipeline run). */
+  def clearCache(): Unit = graft.StagedArtifacts.clear("model/kmeans/")
 
   private def contentKey(s: SparkSession, dir: String): String =
     graft.sources.TableFingerprint.of(s, s"$dir/embeddings.parquet")
@@ -129,21 +105,8 @@ object Kmeans extends graft.QueryModule {
       }
       cents
     }
-    // install-then-train outside the map's locks (StagedArtifacts pattern):
-    // colliding trains of UNRELATED models no longer block each other for
-    // whole multi-iteration Spark jobs under a shared bin lock.
-    val key = s"$dir#$iters#$subset"
-    while (true) {
-      val cur = centroidCache.get(key)
-      if (cur != null && cur.fingerprint == fp) return cur.value
-      val fresh = new ModelEntry(fp, () => train())
-      val installed =
-        if (cur == null) centroidCache.putIfAbsent(key, fresh) == null
-        else centroidCache.replace(key, cur, fresh)
-      if (installed) return fresh.value
-      // lost the install race — re-read and re-decide
-    }
-    throw new IllegalStateException("unreachable")
+    graft.StagedArtifacts.memo[Array[Array[Double]]](s,
+      s"model/kmeans/$dir#$iters#$subset", fp, _ => ())(train())
   }
 
   /** Assignment after `iters` Lloyd rounds, keeping the embedding column so

@@ -59,55 +59,29 @@ object BpeTrain extends graft.QueryModule {
         .filter(col("n") >= minFreq)
         .orderBy(col("n").desc, col("word")).limit(maxWords)
         .collect().map(r => r.getString(0) -> r.getLong(1))
-    // the DEFAULT dictionary memoizes per (corpus, content fingerprint) —
-    // the Kmeans.trainedCentroids discipline: five registered consumers
-    // (bpe vocab/apply, unigram vocab/apply, tokenizer fertility) plus
-    // their dump-time oracles each need it, and re-collecting the same
-    // distributed dictionary per consumer is the redundant corpus pass a
-    // shared trained artifact exists to remove. Non-default bounds (spec
-    // probes) compute directly.
+    // the DEFAULT dictionary memoizes per (corpus, content fingerprint):
+    // five registered consumers (bpe vocab/apply, unigram vocab/apply,
+    // tokenizer fertility) plus their dump-time oracles each need it, and
+    // re-collecting the same distributed dictionary per consumer is the
+    // redundant corpus pass a shared trained artifact exists to remove.
+    // Non-default bounds (spec probes) compute directly.
     if (minFreq == MinWordFreq && maxWords == MaxDictWords)
-      memo(s"dict#$dir", docFp(s, dir))(compute())
+      memo(s, "dict", dir)(compute())
     else compute()
   }
 
   /** The learned merge list, most-frequent first (memoized with the
     * dictionary — `learn` is pure CPU over it, run once per corpus). */
   def trainMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    memo(s"merges#$dir", docFp(s, dir))(learn(wordCounts(s, dir), NumMerges))
+    memo(s, "merges", dir)(learn(wordCounts(s, dir), NumMerges))
 
-  // ---- session memo for trained tokenizer artifacts (driver-sized) ----
-  private final class Entry[T](val fingerprint: String, build0: () => T) {
-    private var built: Option[T] = None
-    def value: T = synchronized {
-      if (built.isEmpty) built = Some(build0())
-      built.get
-    }
-  }
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry[_]]()
+  def clearTokenizerCache(): Unit = graft.StagedArtifacts.clear("text/tokenizer/")
 
-  def clearTokenizerCache(): Unit = cache.clear()
-
-  private[text] def docFp(s: SparkSession, dir: String): String =
-    graft.sources.TableFingerprint.of(s, s"$dir/documents.parquet")
-
-  /** Supersede-memo (the [[graft.StagedArtifacts]] Entry discipline, driver
-    * arrays instead of executor blocks): same key + fingerprint → the
-    * built artifact; a rewritten corpus replaces the stale entry. */
-  private[text] def memo[T](key: String, fp: String)(build: => T): T = {
-    while (true) {
-      val cur = cache.get(key)
-      if (cur != null && cur.fingerprint == fp)
-        return cur.asInstanceOf[Entry[T]].value
-      val fresh = new Entry[T](fp, () => build)
-      val installed =
-        if (cur == null) cache.putIfAbsent(key, fresh) == null
-        else cache.replace(key, cur, fresh)
-      if (installed) return fresh.value
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  /** A trained tokenizer artifact (driver-sized) for `dir`, memoized in
+    * [[graft.StagedArtifacts]] on the documents table's fingerprint. */
+  private[text] def memo[T](s: SparkSession, name: String, dir: String)(build: => T): T =
+    graft.StagedArtifacts.memo[T](s, s"text/tokenizer/$name#$dir",
+      graft.sources.TableFingerprint.of(s, s"$dir/documents.parquet"), _ => ())(build)
 
   /** Pure merge loop over the (word, count) dictionary. */
   def learn(wordCounts: Array[(String, Long)], rounds: Int): Seq[(String, String)] = {

@@ -48,7 +48,7 @@ object Fertility extends graft.QueryModule {
     * (word, bpe_n, uni_n), driver-sized by the trainer bounds (byte
     * length is computed corpus-side). */
   private def wordTokenCounts(s: SparkSession, dir: String): Seq[(String, Long, Long)] =
-    BpeTrain.memo(s"fertility#$dir", BpeTrain.docFp(s, dir)) {
+    BpeTrain.memo(s, "fertility", dir) {
       val dict = BpeTrain.wordCounts(s, dir)
       val merges = BpeTrain.trainMerges(s, dir)
       val model = UnigramTrain.trainedModel(s, dir)

@@ -78,19 +78,7 @@ object QualityClassifier extends graft.QueryModule {
   private val PScale = 1000000L // p6 units: 1e-6
   private val MScale = 1.0e13 // margin units: w9i(1e-9) × x4i(1e-4)
 
-  private final class ModelEntry(val fingerprint: String,
-      build0: () => Array[Long]) {
-    private var built: Array[Long] = null
-    def value: Array[Long] = synchronized {
-      if (built == null) built = build0()
-      built
-    }
-  }
-
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelEntry]()
-
-  def clearCache(): Unit = modelCache.clear()
+  def clearCache(): Unit = graft.StagedArtifacts.clear("model/qualityClf/")
 
   /** Sparse integerized features: (doc_id, dim, x4i) — hashed bigrams on
     * dims 0..63 plus the two dense aux stats. */
@@ -184,18 +172,8 @@ object QualityClassifier extends graft.QueryModule {
   private def trainedWeights(s: SparkSession, dir: String, feat: DataFrame,
       lab: DataFrame, n: Long): Array[Long] = {
     val fp = s"$n#${graft.sources.TableFingerprint.of(s, s"$dir/documents.parquet")}"
-    val key = s"$dir#qualityClf"
-    while (true) {
-      val cur = modelCache.get(key)
-      if (cur != null && cur.fingerprint == fp) return cur.value
-      val fresh = new ModelEntry(fp, () => train(feat, lab, n))
-      val installed =
-        if (cur == null) modelCache.putIfAbsent(key, fresh) == null
-        else modelCache.replace(key, cur, fresh)
-      if (installed) return fresh.value
-      // lost the install race — re-read and re-decide
-    }
-    throw new IllegalStateException("unreachable")
+    graft.StagedArtifacts.memo[Array[Long]](s, s"model/qualityClf/$dir", fp, _ => ())(
+      train(feat, lab, n))
   }
 
   /** The trained model for `dir` (memoized; empty array on empty corpus) —

@@ -89,11 +89,11 @@ object UnigramTrain extends graft.QueryModule {
     a.length < b.length
   }
 
-  /** The EM-pruned unigram model: piece → (final count, log-prob). */
-  /** Session-memoized EM model (the BpeTrain tokenizer-memo discipline):
-    * three registered consumers plus dump-time oracles share one train. */
+  /** The EM-pruned unigram model: piece → (final count, log-prob), a
+    * [[BpeTrain.memo]] tokenizer artifact: three registered consumers plus
+    * dump-time oracles share one train. */
   private[text] def trainedModel(s: SparkSession, dir: String): Map[String, (Long, Double)] =
-    BpeTrain.memo(s"uniModel#$dir", BpeTrain.docFp(s, dir))(
+    BpeTrain.memo(s, "uniModel", dir)(
       train(BpeTrain.wordCounts(s, dir)))
 
   def train(dict: Array[(String, Long)]): Map[String, (Long, Double)] = {

@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * artifact from the new content, (b) release the superseded checkpoint's
   * blocks (gone from `sc.getPersistentRDDs` — the leak a nightly session
   * re-ingesting a mutating corpus cannot afford), and (c) leave every
-  * OTHER staged entry untouched (same object, still persisted). */
+  * OTHER staged entry untouched (same object, still persisted). The same
+  * memo holds the driver-side models: concurrent resolvers share one build,
+  * a supersede releases the old value once, and a rewritten table retrains
+  * its k-means centroids and BPE dictionary. */
 class StagedEvictionSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -81,5 +84,77 @@ class StagedEvictionSpec extends AnyFunSuite {
       assert(outer.head().getLong(0) == i + 1L)
     }
     StagedArtifacts.clear("nestSpec/")
+  }
+
+  test("two threads resolving one name at one fingerprint build once and share the value") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val resolve: java.util.concurrent.Callable[Array[Long]] = () => {
+        start.await()
+        StagedArtifacts.memo[Array[Long]](spark, "memoSpec/shared", "fp", _ => ()) {
+          builds.incrementAndGet()
+          Thread.sleep(200) // hold the build so the other resolver arrives mid-build
+          Array(42L)
+        }
+      }
+      val (a, b) = (pool.submit(resolve), pool.submit(resolve))
+      start.countDown()
+      assert(a.get() eq b.get(), "both resolvers must get the one built value")
+      assert(builds.get == 1, s"one fingerprint must build once, built ${builds.get}")
+    } finally {
+      pool.shutdown()
+      StagedArtifacts.clear("memoSpec/")
+    }
+  }
+
+  test("a supersede releases the old value exactly once; clear releases the current one") {
+    val released = scala.collection.mutable.ArrayBuffer.empty[String]
+    def resolve(fp: String): String =
+      StagedArtifacts.memo[String](spark, "memoSpec/released", fp,
+        v => released.synchronized(released += v))(s"value@$fp")
+    assert(resolve("fpA") == "value@fpA")
+    assert(resolve("fpA") == "value@fpA")
+    assert(released.isEmpty, "a hit releases nothing")
+    assert(resolve("fpB") == "value@fpB")
+    assert(resolve("fpB") == "value@fpB")
+    assert(released.toSeq == Seq("value@fpA"), s"released $released")
+    StagedArtifacts.clear("memoSpec/")
+    assert(released.toSeq == Seq("value@fpA", "value@fpB"), s"released $released")
+    StagedArtifacts.clear("memoSpec/")
+    assert(released.size == 2, "a cleared entry is gone, so it cannot release twice")
+  }
+
+  test("an in-place table rewrite retrains the k-means centroids and the BPE dictionary") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("staged_models").toString
+    def writeEmb(seed: Double): Unit =
+      spark.range(40).select(col("id").as("vec_id"),
+        transform(sequence(lit(1), lit(graft.sim.Kmeans.Dim)),
+          d => sin(col("id") * d.cast("double") * seed)).as("embedding"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def centroids() = graft.sim.Kmeans.trainedCentroids(spark, dir, graft.sim.Kmeans.Iters,
+      Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb")))
+    writeEmb(0.37)
+    writeDocs(dir, Seq("aa ab aa", "ab ab ba"))
+    val c1 = centroids()
+    val d1 = graft.text.BpeTrain.wordCounts(spark, dir)
+    assert(centroids() eq c1, "an unchanged table must serve the trained centroids")
+    assert(graft.text.BpeTrain.wordCounts(spark, dir) eq d1)
+
+    writeEmb(0.61) // same path and row count: only the values move
+    writeDocs(dir, Seq("cc cd cc", "dd cc"))
+    val c2 = centroids()
+    val d2 = graft.text.BpeTrain.wordCounts(spark, dir)
+    assert(!(c2 eq c1) && !c2.map(_.toSeq).sameElements(c1.map(_.toSeq)),
+      "rewritten embeddings must retrain the centroids")
+    assert(d2.toSeq == Seq("cc" -> 3L, "cd" -> 1L, "dd" -> 1L),
+      s"rewritten documents must rebuild the dictionary, got ${d2.toSeq}")
+    graft.sim.Kmeans.clearCache()
+    assert(centroids().map(_.toSeq).sameElements(c2.map(_.toSeq)),
+      "the retrained model is the one a cold session trains")
+    graft.text.BpeTrain.clearTokenizerCache()
   }
 }

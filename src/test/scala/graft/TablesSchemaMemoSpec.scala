@@ -113,10 +113,10 @@ class TablesSchemaMemoSpec extends AnyFunSuite {
       .write.parquet(s"$ntzDir/events.parquet")
 
     for (_ <- 1 to 2) { // the second round reads through remembered schemas
-      val fromNanos = Tables.events(spark, nanosDir) // sets nanosAsLong
-      val fromNtz = Tables.events(spark, ntzDir)
       assert(Tables.table(spark, nanosDir, "events").schema("ts").dataType == LongType)
       assert(Tables.table(spark, ntzDir, "events").schema("ts").dataType == TimestampNTZType)
+      val fromNanos = Tables.events(spark, nanosDir)
+      val fromNtz = Tables.events(spark, ntzDir)
       assert(fromNanos.schema("ts").dataType == TimestampType)
       assert(fromNtz.schema("ts").dataType == TimestampType)
       assert(rows(fromNanos) == rows(fromNtz))
@@ -126,10 +126,21 @@ class TablesSchemaMemoSpec extends AnyFunSuite {
     }
   }
 
+  test("a fresh session reads a NANOS table as LongType before any events call") {
+    // nanosAsLong is session posture, not a side effect of Tables.events:
+    // a plain read in a new session must not depend on what ran first
+    val dir = tempDir("graft_memo_posture")
+    nanosEvents(dir, Seq(1704110400123456789L, 1704196800000001000L))
+    val fresh = spark.newSession()
+    assert(fresh.conf.get(NanosAsLong) == "true")
+    val t = Tables.table(fresh, dir, "events")
+    assert(t.schema("ts").dataType == LongType)
+    assert(t.count() == 2)
+  }
+
   test("another nanosAsLong value, in this session or a new one, does not get the entry") {
     val dir = tempDir("graft_memo_session")
     nanosEvents(dir, Seq(1704110400123456789L))
-    Tables.events(spark, dir)
     assert(spark.conf.get(NanosAsLong) == "true")
     assert(Tables.table(spark, dir, "events").schema("ts").dataType == LongType)
 

@@ -133,6 +133,22 @@ class IncrementalNearDupSpec extends AnyFunSuite {
       "post-rewrite incremental must match from-scratch on the NEW corpus")
   }
 
+  test("a superseded store and a cleared store are deleted from disk") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_incr_release").toString
+    val mk = (tag: String) => (0L until 10L).map(i => (i, s"$tag$i some shared words"))
+    def storeRoot(path: String) = new java.io.File(path).getParentFile
+    docsDf(mk("alpha")).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val (_, first) = IncrementalNearDup.storeFor(spark, dir)
+    assert(new java.io.File(first).isDirectory)
+    assert(IncrementalNearDup.storeFor(spark, dir)._2 == first, "an unchanged corpus keeps its store")
+    docsDf(mk("beta")).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val (_, second) = IncrementalNearDup.storeFor(spark, dir)
+    assert(second != first && new java.io.File(second).isDirectory)
+    assert(!storeRoot(first).exists, s"superseded store left on disk: $first")
+    IncrementalNearDup.clearStoreCache()
+    assert(!storeRoot(second).exists, s"cleared store left on disk: $second")
+  }
+
   test("cross-batch, intra-batch, and appended-store dups all surface") {
     // varied vocabulary → a large distinct-shingle set, so a small suffix
     // edit keeps true Jaccard ≈ 0.95 and the K=64 estimate far above 0.5

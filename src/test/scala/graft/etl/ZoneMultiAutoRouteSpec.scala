@@ -3,7 +3,6 @@ package graft.etl
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.plans.RewriteContainmentJoin
 
 /** VERDICT r6 #3: the UNCHANGED `EtlQueries.zoneMulti` entry point must
   * route itself past the broadcast NLJ when the zone dim outgrows
@@ -42,15 +41,15 @@ class ZoneMultiAutoRouteSpec extends AnyFunSuite {
       assert(plan.contains("_gcell"),
         "the grid-cell equi-join must carry the rewrite's cell keys")
       val auto = df.collect().map(_.toSeq)
-      // reference: routing off → the operator's own broadcast-hinted NLJ
-      spark.conf.set(RewriteContainmentJoin.AutoKey, "false")
+      // reference: broadcast threshold off → the rule stands down and the
+      // operator's own broadcast hint plans the NLJ
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
       val refDf = EtlQueries.zoneMulti(spark, bigZoneDir)
       assert(refDf.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
       val ref = refDf.collect().map(_.toSeq)
       assert(auto.toSeq == ref.toSeq, "cell routing must not change a single assignment")
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset(RewriteContainmentJoin.AutoKey)
     }
   }
 

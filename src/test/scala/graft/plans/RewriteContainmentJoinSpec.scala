@@ -3,11 +3,16 @@ package graft.plans
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{ScopedConf, Tables, TestSpark}
 import graft.etl.Synth
 
 class RewriteContainmentJoinSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
+
+  /** A 1-byte broadcast threshold puts every bounds side over it, so the
+    * rule's size routing rewrites any matching join. */
+  private def overThreshold[T](body: => T): T =
+    ScopedConf.run(spark, "spark.sql.autoBroadcastJoinThreshold", "1")(body)
 
   private def points = {
     val id = col("event_id")
@@ -30,34 +35,32 @@ class RewriteContainmentJoinSpec extends AnyFunSuite {
   test("rule rewrites the containment join to a cell equi-join with identical results") {
     RewriteContainmentJoin.install(spark)
     val baseline = boxJoin.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    spark.conf.set(RewriteContainmentJoin.ConfKey, "true")
-    try {
+    overThreshold {
       val rewritten = boxJoin
       val plan = rewritten.queryExecution.executedPlan.toString
       assert(!plan.contains("NestedLoop"), s"rule should remove the nested loop:\n$plan")
       assert(plan.contains("_gcell"), "cell key must drive the join")
       val got = rewritten.collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(got == baseline)
-    } finally spark.conf.set(RewriteContainmentJoin.ConfKey, "false")
+    }
   }
 
   test("rule is inert when disabled or on non-matching joins") {
     RewriteContainmentJoin.install(spark)
+    // the 5-row zone dim sits below the default threshold: no rewrite
     assert(boxJoin.queryExecution.executedPlan.toString.contains("NestedLoop"))
-    spark.conf.set(RewriteContainmentJoin.ConfKey, "true")
-    try {
+    overThreshold {
       // equi-join: no box pattern, must be untouched
       val o = Tables.orders(spark, TestSpark.sf)
       val c = Tables.customer(spark, TestSpark.sf)
       val eq = o.join(c, col("o_custkey") === col("c_custkey"))
       assert(!eq.queryExecution.executedPlan.toString.contains("_gcell"))
-    } finally spark.conf.set(RewriteContainmentJoin.ConfKey, "false")
+    }
   }
 
   test("rule leaves non-double interval joins (dates, longs) untouched") {
     RewriteContainmentJoin.install(spark)
-    spark.conf.set(RewriteContainmentJoin.ConfKey, "true")
-    try {
+    overThreshold {
       import spark.implicits._
       // a long-typed temporal range join: rewriting it through
       // Floor(Divide(x, 0.05))/Sequence would be an invalid plan
@@ -69,13 +72,12 @@ class RewriteContainmentJoinSpec extends AnyFunSuite {
       val got = joined.select("eid", "name").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
       assert(got == Set((1L, "a"), (2L, "b")))
-    } finally spark.conf.set(RewriteContainmentJoin.ConfKey, "false")
+    }
   }
 
   test("rule catches points between a cell edge and a straddling sliver hi") {
     RewriteContainmentJoin.install(spark)
-    spark.conf.set(RewriteContainmentJoin.ConfKey, "true")
-    try {
+    overThreshold {
       import spark.implicits._
       // cell edge at 0.05 (CellDeg grid); box hi sits 1e-13 above it — the
       // point at exactly 0.05 is in [w, e) but lives in the NEXT cell
@@ -88,13 +90,12 @@ class RewriteContainmentJoinSpec extends AnyFunSuite {
       assert(joined.queryExecution.executedPlan.toString.contains("_gcell"))
       val got = joined.select("pid").collect().map(_.getLong(0)).toSet
       assert(got == Set(1L), s"edge point must match the straddling sliver, got $got")
-    } finally spark.conf.set(RewriteContainmentJoin.ConfKey, "false")
+    }
   }
 
   test("rule handles degenerate boxes (hi <= lo) as empty, not an error") {
     RewriteContainmentJoin.install(spark)
-    spark.conf.set(RewriteContainmentJoin.ConfKey, "true")
-    try {
+    overThreshold {
       import spark.implicits._
       val pts = Seq((1L, 0.5, 0.5)).toDF("pid", "x", "y")
       val boxes = Seq(("inv", 1.0, 0.0, 0.0, 1.0), ("ok", 0.0, 1.0, 0.0, 1.0))
@@ -106,6 +107,6 @@ class RewriteContainmentJoinSpec extends AnyFunSuite {
       val got = joined.select("pid", "name").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
       assert(got == Set((1L, "ok")))
-    } finally spark.conf.set(RewriteContainmentJoin.ConfKey, "false")
+    }
   }
 }
